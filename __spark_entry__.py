@@ -20,6 +20,7 @@ from pyspark.sql import functions as F, Window as W
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from otel_arrow_adapter_spark.caching import materialize  # noqa: E402
 from otel_arrow_adapter_spark.datagen import (  # noqa: E402
     synthesize_tool_catalog,
     transcripts_from_events,
@@ -603,12 +604,10 @@ def q_pipeline_metrics_exp_hist_merge(spark: SparkSession, sf_dir: str) -> DataF
     # one gated pass builds BOTH scale families (the two separate rollups
     # were two full scans of the fact); merge references its input 4x
     # (min-scale dim, scalars, both bucket families) so the tiny per-key
-    # union comes back eagerly checkpointed — each reference reads a flat
-    # 4-row RDD instead of re-planning the scan->parse->rollup lineage
-    # (the round-start plan repeated the parquet scan 24x,
+    # union comes back materialized — each reference reads a flat 4-row
+    # RDD instead of re-planning the scan->parse->rollup lineage (the
+    # round-start plan repeated the parquet scan 24x,
     # plans/r06/*_before.txt)
-    from otel_arrow_adapter_spark.caching import owned_result
-
     both = exp_histogram_rollup_pair(
         pts,
         F.col("turn_idx") % 2 == 0,
@@ -631,7 +630,7 @@ def q_pipeline_metrics_exp_hist_merge(spark: SparkSession, sf_dir: str) -> DataF
         "min",
         "max",
     )
-    return owned_result(out, both)
+    return materialize(out, both)
 
 
 def q_pipeline_metrics_temporality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -694,15 +693,11 @@ def q_pipeline_metrics_dp_records(spark: SparkSession, sf_dir: str) -> DataFrame
     from otel_arrow_adapter_spark.datagen.metrics import synthesize_metrics_nested
     from otel_arrow_adapter_spark.operators.metrics_dp import encode_metrics
 
-    # persist: 9 per-record count branches would otherwise each re-run the
-    # generator's shuffles; the cached 300-row nested table makes each
-    # branch a local explode+agg
-    from otel_arrow_adapter_spark.caching import owned_result
-
-    # localCheckpoint, not persist: the 9 count branches each re-analyze
-    # nested's plan per action; a flat LogicalRDD makes every branch's
-    # analysis constant-size (measured 6.1s -> 2.7s for this query)
-    nested = synthesize_metrics_nested(spark, n_metrics=300).localCheckpoint(eager=True)
+    # materialized: 9 per-record count branches would otherwise each re-run
+    # and re-analyze the generator's shuffles; the flat 300-row nested
+    # table makes each branch a local explode+agg (measured 6.1s -> 2.7s
+    # for this query)
+    nested = materialize(synthesize_metrics_nested(spark, n_metrics=300))
     records = encode_metrics(nested)
     parts = [
         df.agg(F.count(F.lit(1)).alias("n_rows")).select(F.lit(name).alias("record"), "n_rows")
@@ -711,7 +706,7 @@ def q_pipeline_metrics_dp_records(spark: SparkSession, sf_dir: str) -> DataFrame
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return owned_result(out, nested)
+    return materialize(out, nested)
 
 
 # ---------------------------------------------------------------------------
@@ -765,10 +760,8 @@ def q_pipeline_trace_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     from otel_arrow_adapter_spark.datagen.traces import synthesize_traces_nested
     from otel_arrow_adapter_spark.operators.span_records import encode_traces
 
-    from otel_arrow_adapter_spark.caching import owned_result
-
-    # localCheckpoint, not persist — same rationale as metrics_dp_records
-    nested = synthesize_traces_nested(spark, n_spans=300).localCheckpoint(eager=True)
+    # materialized — same rationale as metrics_dp_records
+    nested = materialize(synthesize_traces_nested(spark, n_spans=300))
     records = encode_traces(nested)
     parts = [
         df.agg(F.count(F.lit(1)).alias("n_rows")).select(F.lit(name).alias("record"), "n_rows")
@@ -777,7 +770,7 @@ def q_pipeline_trace_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return owned_result(out, nested)
+    return materialize(out, nested)
 
 
 # ---------------------------------------------------------------------------
@@ -1087,10 +1080,10 @@ def q_doc_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_candidates(sig, num_hashes=8, bands=4)
 
 
-def q_doc_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidate generation + exact Jaccard verify — the
-    scale path (the all-pairs inverted-index join is quadratic on hot
-    shingles; candidates bound it)."""
+def _near_dup_pairs(dp: DataFrame) -> DataFrame:
+    """Verified near-duplicate pairs (doc_a, doc_b, jaccard) of ``dp``:
+    MinHash-LSH candidates -> exact Jaccard >= 0.5, materialized; the
+    caller owns the result."""
     from otel_arrow_adapter_spark.functions.dedup import (
         doc_shingles,
         jaccard_pairs,
@@ -1098,7 +1091,6 @@ def q_doc_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signature,
     )
 
-    dp = _docs_plus(spark, sf_dir)
     # ONE shingling pass shared by the minhash and the exact-verify join
     # distinct=False: minhash's min() is duplicate-insensitive and the
     # set-based Jaccard verify dedups via collect_set, so the corpus-wide
@@ -1106,12 +1098,18 @@ def q_doc_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = doc_shingles(dp, distinct=False).persist()
     cand = lsh_candidates(minhash_signature(dp, num_hashes=8, shingles=sh), num_hashes=8, bands=4)
     pairs = jaccard_pairs(dp, threshold=0.5, candidates=cand, shingles=sh)
-    # jaccard_pairs no longer frees caller caches (ownership stays with the
-    # creator); pairs is already materialized by owned_result, so the two
-    # caches this query created can be released here
+    # jaccard_pairs leaves caller-supplied frames alone; pairs is already
+    # materialized, so the two this helper created are released here
     sh.unpersist()
     cand.unpersist()
     return pairs
+
+
+def q_doc_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH candidate generation + exact Jaccard verify — the
+    scale path (the all-pairs inverted-index join is quadratic on hot
+    shingles; candidates bound it)."""
+    return _near_dup_pairs(_docs_plus(spark, sf_dir))
 
 
 def q_doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1122,23 +1120,9 @@ def q_doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     A~B and B~C must collapse to one kept doc even when A~C was never
     emitted. Oracle: DuckDB recursive CTE computing min reachable doc_id
     over the symmetric edge closure."""
-    from otel_arrow_adapter_spark.functions.dedup import (
-        doc_shingles,
-        dup_clusters,
-        jaccard_pairs,
-        lsh_candidates,
-        minhash_signature,
-    )
+    from otel_arrow_adapter_spark.functions.dedup import dup_clusters
 
-    dp = _docs_plus(spark, sf_dir)
-    # distinct=False: minhash's min() is duplicate-insensitive and the
-    # set-based Jaccard verify dedups via collect_set, so the corpus-wide
-    # (doc_id, shingle) distinct shuffle is skipped (guide §2.4)
-    sh = doc_shingles(dp, distinct=False).persist()
-    cand = lsh_candidates(minhash_signature(dp, num_hashes=8, shingles=sh), num_hashes=8, bands=4)
-    pairs = jaccard_pairs(dp, threshold=0.5, candidates=cand, shingles=sh)
-    sh.unpersist()
-    cand.unpersist()
+    pairs = _near_dup_pairs(_docs_plus(spark, sf_dir))
     out = dup_clusters(pairs)
     pairs.unpersist()
     return out
@@ -1153,24 +1137,11 @@ def q_doc_clean_corpus_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join against the drop list shuffles on doc_id — O(dup docs), the
     natural scale shape. Oracle: recursive-CTE closure + the shared
     quality/token scoring SQL."""
-    from otel_arrow_adapter_spark.functions.dedup import (
-        doc_shingles,
-        dup_clusters,
-        jaccard_pairs,
-        lsh_candidates,
-        minhash_signature,
-    )
+    from otel_arrow_adapter_spark.functions.dedup import dup_clusters
     from otel_arrow_adapter_spark.functions.text import quality_score, token_count
 
     dp = _docs_plus(spark, sf_dir)
-    # distinct=False: minhash's min() is duplicate-insensitive and the
-    # set-based Jaccard verify dedups via collect_set, so the corpus-wide
-    # (doc_id, shingle) distinct shuffle is skipped (guide §2.4)
-    sh = doc_shingles(dp, distinct=False).persist()
-    cand = lsh_candidates(minhash_signature(dp, num_hashes=8, shingles=sh), num_hashes=8, bands=4)
-    pairs = jaccard_pairs(dp, threshold=0.5, candidates=cand, shingles=sh)
-    sh.unpersist()
-    cand.unpersist()
+    pairs = _near_dup_pairs(dp)
     clusters = dup_clusters(pairs)
     pairs.unpersist()
     drop = clusters.where(~F.col("is_rep")).select("doc_id")
@@ -1183,9 +1154,7 @@ def q_doc_clean_corpus_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = scored.where(F.col("q") >= 0.5).select(
         "doc_id", "n_tokens", F.round("q", 6).alias("quality")
     )
-    from otel_arrow_adapter_spark.caching import owned_result
-
-    return owned_result(out, clusters)
+    return materialize(out, clusters)
 
 
 def q_doc_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1424,12 +1393,8 @@ def q_emb_ivf_search_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    from otel_arrow_adapter_spark.caching import owned_result
-
     cents = kmeans_train(e, n_centroids=5, iters=2)
-    return owned_result(
-        ivf_search(e, query_vec_id=0, k=10, n_probe=2, centroids=cents), cents
-    )
+    return materialize(ivf_search(e, query_vec_id=0, k=10, n_probe=2, centroids=cents), cents)
 
 
 def q_emb_ann_pairs_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1498,8 +1463,6 @@ def q_emb_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    from otel_arrow_adapter_spark.caching import owned_result
-
     cents = kmeans_train(e, n_centroids=5, iters=2)
     census = assign_to_centroids(e, cents).groupBy("centroid_id").agg(
         F.count(F.lit(1)).alias("n_vecs")
@@ -1507,7 +1470,7 @@ def q_emb_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = census.join(
         cents.select("centroid_id", F.size("c_vec").alias("dim")), "centroid_id"
     ).select("centroid_id", "n_vecs", "dim")
-    return owned_result(out, cents)
+    return materialize(out, cents)
 
 
 def q_pipeline_delta_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2146,23 +2109,10 @@ def q_doc_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     components, then every cluster member follows the CLUSTER's md5 draw
     (split key = component min doc id) — near-duplicates can never
     straddle the split boundary. val_frac=0.2."""
-    from otel_arrow_adapter_spark.functions.dedup import (
-        doc_shingles,
-        jaccard_pairs,
-        leakage_free_split,
-        lsh_candidates,
-        minhash_signature,
-    )
+    from otel_arrow_adapter_spark.functions.dedup import leakage_free_split
 
     dp = _docs_plus(spark, sf_dir)
-    # distinct=False: minhash's min() is duplicate-insensitive and the
-    # set-based Jaccard verify dedups via collect_set, so the corpus-wide
-    # (doc_id, shingle) distinct shuffle is skipped (guide §2.4)
-    sh = doc_shingles(dp, distinct=False).persist()
-    cand = lsh_candidates(minhash_signature(dp, num_hashes=8, shingles=sh), num_hashes=8, bands=4)
-    pairs = jaccard_pairs(dp, threshold=0.5, candidates=cand, shingles=sh)
-    sh.unpersist()
-    cand.unpersist()
+    pairs = _near_dup_pairs(dp)
     out = leakage_free_split(dp, pairs, val_frac=0.2)
     pairs.unpersist()
     return out

@@ -24,9 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import free_local_checkpoint as _free_local_checkpoint
-from ..caching import is_materialized as _is_materialized
-from ..caching import owned_result
+from ..caching import materialize
 from .text import fingerprint, shingles
 
 DEFAULT_NUM_HASHES = 8
@@ -152,7 +150,7 @@ def lsh_candidates(
         .distinct()
     )
     # candidate pairs are the keeper; the banded long table is scaffolding
-    return owned_result(pairs, stacked)
+    return materialize(pairs, stacked)
 
 
 def jaccard_pairs(
@@ -184,13 +182,11 @@ def jaccard_pairs(
     ``candidates`` frames are never persisted or unpersisted here — a
     caller sharing one shingle table across several calls keeps its cache
     (cache the passed frames yourself; an uncached ``shingles`` with no
-    ``candidates`` is re-evaluated per use)."""
-    owned: list[DataFrame] = []
+    ``candidates`` is re-evaluated per use). ``candidates`` is read 3x
+    (doc-id set + 2 pair joins): pass :func:`lsh_candidates` output, which
+    is already materialized."""
     sh = doc_shingles(docs, k, distinct=False) if shingles is None else shingles
     if candidates is not None:
-        if not _is_materialized(candidates):
-            candidates = candidates.persist()  # used 3x: doc-id set + 2 pair joins
-            owned.append(candidates)
         cand_docs = (
             candidates.select(F.col("doc_a").alias("doc_id"))
             .unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
@@ -222,12 +218,11 @@ def jaccard_pairs(
             .where(F.col("jaccard") >= threshold)
             .select("doc_a", "doc_b", "jaccard")
         )
-        return owned_result(out, *owned)
+        return materialize(out)
     # No candidates: the exact inverted-index path (test/ground-truth scale).
     # distinct() is idempotent, so a shared non-distinct shingle table is
     # handled identically to a pre-distinct one.
     sh = sh.distinct().persist()  # used 3x: both join sides + sizes
-    owned.append(sh)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     common = (
@@ -248,7 +243,7 @@ def jaccard_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    return owned_result(out, *owned)
+    return materialize(out, sh)
 
 
 def incremental_dedup(
@@ -280,29 +275,22 @@ def incremental_dedup(
     keep-first groupBy."""
     # fingerprints + the exact/batch-dup verdicts are each referenced by
     # several downstream materializations (survivors' anti-joins AND the
-    # final classification join). Un-checkpointed, every reference
+    # final classification join). Unmaterialized, every reference
     # re-derived the whole batch union (4 scans of the source) and re-ran
     # the md5 fingerprint over the FULL text — the expensive per-row op of
     # the exact stage — 3-4x per run. The verdict frames are O(batch)
-    # doc_id rows; checkpoint them once and every consumer reads a flat
-    # RDD (guide §1.2 via the same mechanism as caching.owned_result).
-    fp_b = batch.select(
-        "doc_id", fingerprint(F.col(text_col)).alias("fp")
-    ).localCheckpoint(eager=True)
+    # doc_id rows; materialize them once.
+    fp_b = materialize(batch.select("doc_id", fingerprint(F.col(text_col)).alias("fp")))
     fp_i = index.select(fingerprint(F.col(text_col)).alias("fp")).distinct()
-    exact = (
-        fp_b.join(fp_i, "fp", "left_semi")
-        .select("doc_id")
-        .withColumn("r_exact", F.lit(True))
-        .localCheckpoint(eager=True)
+    exact = materialize(
+        fp_b.join(fp_i, "fp", "left_semi").select("doc_id").withColumn("r_exact", F.lit(True))
     )
     keeper = fp_b.groupBy("fp").agg(F.min("doc_id").alias("_keeper"))
-    bdup = (
+    bdup = materialize(
         fp_b.join(keeper, "fp")
         .where(F.col("doc_id") != F.col("_keeper"))
         .select("doc_id")
         .withColumn("r_batch", F.lit(True))
-        .localCheckpoint(eager=True)
     )
     # near-dup vs the index — computed only for docs that SURVIVED the
     # exact stages (classic order: exact first, near on survivors). This
@@ -319,23 +307,17 @@ def incremental_dedup(
     # minhash_signature's ``shingles`` parameter). Non-distinct: minhash's
     # min() is duplicate-insensitive and the set verify dedups via
     # collect_set, so the corpus-wide (doc_id, shingle) distinct shuffle
-    # is skipped entirely (guide §2.4).
-    # localCheckpoint (eager), not persist: each is consumed by several
-    # downstream materializations whose plans would otherwise re-analyze
-    # the whole upstream per action (see caching.owned_result); the
-    # truncated frames keep every later analysis constant-size
-    sh_surv = doc_shingles(survivors, k, text_col, distinct=False).localCheckpoint(eager=True)
-    sh_idx = doc_shingles(index, k, text_col, distinct=False).localCheckpoint(eager=True)
+    # is skipped entirely (guide §2.4). Each is read by several downstream
+    # materializations, so each is materialized once.
+    sh_surv = materialize(doc_shingles(survivors, k, text_col, distinct=False))
+    sh_idx = materialize(doc_shingles(index, k, text_col, distinct=False))
     bb = banded_buckets(
         minhash_signature(survivors, num_hashes, k, shingles=sh_surv), num_hashes, bands
     )
     bi = banded_buckets(
         minhash_signature(index, num_hashes, k, shingles=sh_idx), num_hashes, bands
     ).select(F.col("doc_id").alias("index_doc"), "band", "bucket")
-    cand = (
-        bb.join(bi, ["band", "bucket"]).select("doc_id", "index_doc").distinct()
-        .localCheckpoint(eager=True)
-    )
+    cand = materialize(bb.join(bi, ["band", "bucket"]).select("doc_id", "index_doc").distinct())
     # Jaccard verify: one distinct shingle SET per candidate doc (both
     # sides), then a map-side array_intersect per candidate pair — no
     # shingle-grain join exists here at all (the former inverted-index
@@ -382,7 +364,7 @@ def incremental_dedup(
         .join(near, "doc_id", "left")
         .select("doc_id", reason.alias("reason"), (reason == "new").alias("keep"))
     )
-    return owned_result(out, cand, sh_surv, sh_idx, fp_b, exact, bdup)
+    return materialize(out, cand, sh_surv, sh_idx, fp_b, exact, bdup)
 
 
 def dup_clusters(
@@ -404,31 +386,20 @@ def dup_clusters(
 
     Shape per round: one edges⋈labels join + one groupBy(dst).min —
     both shuffle on doc_id, so AQE coalesces them into the same exchange
-    footprint; labels are persisted per round and the previous round's
-    cache released (resident state = 2 x one row per doc, same discipline
-    as kmeans_train).  Convergence = a changed-label count per round
-    (a join of two cached per-doc frames), bounded by ``max_iters``.
+    footprint; each round's labels are materialized and the previous
+    round's freed (resident state = edges + 2 x one row per doc, same
+    discipline as kmeans_train).  Convergence = a changed-label count per
+    round, bounded by ``max_iters``.
     Rounds needed = component diameter: near-dup clusters are dense and
     shallow (a dup group is near-clique), so 3-5 rounds in practice; for
     adversarially long chain graphs the known upgrade is
     large-star/small-star path doubling (O(log d)) — not worth its extra
     shuffles for dedup workloads.
 
-    Lineage discipline — the part persist() alone cannot give you: each
-    round's labels frame is ``localCheckpoint(eager=True)``-truncated, so
-    every iteration starts from a flat LogicalRDD instead of a plan that
-    nests the previous round's.  persist() truncates EXECUTION but not the
-    plan tree; with plain caching the per-round plan nests one
-    InMemoryRelation-of-AdaptiveSparkPlan deeper each round and plan
-    rendering for the SQL listener grows superlinearly — measured on a
-    13-node chain: round cost climbs 1.1 s → 9.7 s by round 10
-    (generateTreeString dominates; at cluster scale this is a driver OOM).
-    With checkpoint truncation the same chain runs every round flat
-    (~0.6 s) and the final plan is a constant ~44 chars.  The checkpointed
-    RDD lives at RDD level, invisible to Dataset.unpersist — each round
-    frees the previous round's via the LogicalRDD handle
-    (``_free_local_checkpoint``), keeping resident state = edges + 2×one
-    row per doc, same discipline as kmeans_train.
+    Materializing each round keeps every iteration's plan flat instead of
+    nesting the previous round's (see caching.py for the measured cost of
+    the nested form); the final plan is a constant ~44 chars.  The caller
+    owns the returned cluster map.
     """
     sym = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).unionByName(
         pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
@@ -438,19 +409,16 @@ def dup_clusters(
     # sym is symmetric, so its src column already covers every node — the
     # self-loops derive from sym directly and the final distinct dedups
     # them, skipping a separate nodes-distinct shuffle (guide §2.4).
-    # localCheckpoint, NOT persist: a persisted edges frame still EMBEDS
-    # the whole pair-finder plan (LSH -> Jaccard, hundreds of nodes), and
-    # every round's query re-analyzes that tree even though execution hits
-    # the cache — measured ~8 s of pure Catalyst planning per round at
-    # sf0.1 vs <1 s once the lineage is cut to a flat LogicalRDD.
-    edges = (
-        sym.unionByName(sym.select(F.col("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # Materialized because every round reads it: a persisted edges frame
+    # would still EMBED the whole pair-finder plan (LSH -> Jaccard,
+    # hundreds of nodes) — measured ~8 s of pure Catalyst planning per
+    # round at sf0.1 vs <1 s flat.
+    edges = materialize(
+        sym.unionByName(sym.select(F.col("src"), F.col("src").alias("dst"))).distinct()
     )
     # initial labels derive from the FLAT edges (self-loop rows are exactly
     # the node set), so no plan ever references the pair finder again; no
-    # checkpoint of its own needed — round 0's checkpoint truncates it
+    # materialization of its own needed — round 0's truncates it
     labels = edges.where(F.col("src") == F.col("dst")).select(
         F.col("src").alias("doc_id"), F.col("src").alias("label")
     )
@@ -469,15 +437,13 @@ def dup_clusters(
         )
 
     # Two propagation steps per materialization: the shuffles per step are
-    # inherent (they ARE the label propagation), but checkpoint + count jobs
+    # inherent (they ARE the label propagation), but materialize + count jobs
     # are pure per-round overhead — halved by checking convergence every
     # second step. Stopping when the LAST step changed nothing is exact:
     # min-label propagation is monotone, a no-change step is a fixed point.
     for _ in range(max(1, max_iters // 2)):
-        nxt = _propagate(_propagate(labels)).localCheckpoint(eager=True)
-        changed = nxt.where(F.col("label") != F.col("_prev")).count()
-        _free_local_checkpoint(labels)
-        labels = nxt
+        labels = materialize(_propagate(_propagate(labels)), labels)
+        changed = labels.where(F.col("label") != F.col("_prev")).count()
         if changed == 0:
             break
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
@@ -490,11 +456,7 @@ def dup_clusters(
             (F.col("doc_id") == F.col("label")).alias("is_rep"),
         )
     )
-    out = out.persist()
-    out.count()
-    _free_local_checkpoint(edges)
-    _free_local_checkpoint(labels)
-    return out
+    return materialize(out, edges, labels)
 
 
 def leakage_free_split(
@@ -516,21 +478,22 @@ def leakage_free_split(
     (O(component diameter) rounds); the cluster map is O(dup docs) — tiny
     next to the corpus — and joins back on doc_id; the draw itself is a
     pure md5 expression (reproducible across engines and re-runs, no RNG
-    state). Returns (doc_id, split_key, split)."""
-    cmap = dup_clusters(pairs, id_name=id_col).select(id_col, "cluster_id")
-    joined = docs.select(id_col).join(cmap, id_col, "left")
+    state). Returns (doc_id, split_key, split); the caller owns it."""
+    clusters = dup_clusters(pairs, id_name=id_col)
+    joined = docs.select(id_col).join(clusters.select(id_col, "cluster_id"), id_col, "left")
     key = F.coalesce(F.col("cluster_id"), F.col(id_col))
     u = F.pmod(
         F.conv(F.substring(F.md5(key.cast("string")), 1, 12), 16, 10).cast("long"),
         F.lit(denom),
     )
-    return joined.select(
+    out = joined.select(
         id_col,
         key.alias("split_key"),
         F.when(u < int(val_frac * denom), F.lit("val"))
         .otherwise(F.lit("train"))
         .alias("split"),
     )
+    return materialize(out, clusters)
 
 
 
@@ -639,7 +602,7 @@ def simhash_near_dups(
         .where(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
-    return owned_result(out, sig)
+    return materialize(out, sig)
 
 
 def dup_spans(

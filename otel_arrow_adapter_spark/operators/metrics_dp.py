@@ -528,29 +528,31 @@ def exp_histogram_rollup_pair(
     what ``false_spec`` must satisfy (same covered value range:
     ``max_buckets_t = max_buckets_f * 2^(scale_t - scale_f)``).
 
-    Returns the union eagerly ``localCheckpoint``-ed (the caller owns it,
-    same contract as the frames fed to ``merge_exp_histograms`` before);
-    the intermediate per-(key, gate) fine aggregate is freed here.
-    Row-presence semantics match the two-call form: a family row exists
-    iff its subset contains at least one input row."""
-    from otel_arrow_adapter_spark.caching import free_local_checkpoint
+    Returns the union materialized (the caller owns it and should
+    ``unpersist()`` it when done); the intermediate per-(key, gate) fine
+    aggregate is freed here. Row-presence semantics match the two-call
+    form: a family row exists iff its subset contains at least one input
+    row."""
+    from otel_arrow_adapter_spark.caching import materialize
 
     (mb_t, sc_t), (mb_f, sc_f) = true_spec, false_spec
-    factor = 1 << (sc_t - sc_f)
-    if sc_t < sc_f or mb_t != mb_f * factor:
+    if sc_t < sc_f or mb_t != mb_f << (sc_t - sc_f):
         raise ValueError(
             f"false_spec {false_spec} is not a lossless downscale of "
             f"true_spec {true_spec}: need max_buckets_t = max_buckets_f * "
             f"2^(scale_t - scale_f)"
         )
-    dense = exp_histogram_rollup(
-        points.withColumn("_gate", gate),
-        max_buckets=mb_t,
-        value_col=value_col,
-        keys=(*keys, "_gate"),
-        scale=sc_t,
-        trim=False,
-    ).localCheckpoint(eager=True)
+    factor = 1 << (sc_t - sc_f)
+    dense = materialize(
+        exp_histogram_rollup(
+            points.withColumn("_gate", gate),
+            max_buckets=mb_t,
+            value_col=value_col,
+            keys=(*keys, "_gate"),
+            scale=sc_t,
+            trim=False,
+        )
+    )
 
     def family(is_true: bool) -> DataFrame:
         pos, neg = F.col("positive_bucket_counts"), F.col("negative_bucket_counts")
@@ -573,9 +575,7 @@ def exp_histogram_rollup_pair(
             "max",
         )
 
-    both = family(True).unionByName(family(False)).localCheckpoint(eager=True)
-    free_local_checkpoint(dense)
-    return both
+    return materialize(family(True).unionByName(family(False)), dense)
 
 
 def trim_exp_buckets(counts: Column) -> tuple[Column, Column]:

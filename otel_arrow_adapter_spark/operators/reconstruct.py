@@ -44,16 +44,6 @@ def attrs_store(attrs: DataFrame, parent_cols: tuple[str, ...] = ("conv_id", "tu
     )
 
 
-def join_attrs(main: DataFrame, store: DataFrame, parent_cols: tuple[str, ...] = ("conv_id", "turn_idx")) -> DataFrame:
-    """J2: main ⋈ attrs store on the surrogate key (left join — parents
-    without attributes keep an empty map, like the reference's store miss
-    returning an empty pcommon.Map)."""
-    out = main.join(store, on=list(parent_cols), how="left")
-    return out.withColumn(
-        "attrs", F.coalesce(F.col("attrs"), F.map_from_arrays(F.array(), F.array()))
-    )
-
-
 def _sink_checks() -> dict[str, list]:
     """sink -> [(condition that must hold, error label)] — the decode-side
     validation of pkg/otel/logs/otlp/logs.go:145-154 (ID length checks,

@@ -138,10 +138,6 @@ def _decode_any_value(buf: bytes, lo: int, hi: int) -> str | None:
     return None
 
 
-def _count_attrs(buf: bytes, lo: int, hi: int) -> int:
-    return sum(1 for f, _, _ in _iter_fields(buf, lo, hi) if f == 1)
-
-
 def _decode_kv(buf: bytes, lo: int, hi: int) -> tuple[str | None, str | None]:
     """One KeyValue message -> (key, AnyValue rendered as string)."""
     key = val = None

@@ -21,6 +21,24 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def dedup_materialized(monkeypatch):
+    """Frames handed to functions.dedup's ``materialize``, in call order.
+    A materialized result's own plan is a flat LogicalRDD, so plan gates
+    inspect the producing plan recorded here."""
+    from otel_arrow_adapter_spark.functions import dedup
+
+    seen = []
+    real = dedup.materialize
+
+    def spy(df, *consumed):
+        seen.append(df)
+        return real(df, *consumed)
+
+    monkeypatch.setattr(dedup, "materialize", spy)
+    return seen
+
+
 @pytest.fixture(scope="session")
 def transcripts(spark):
     """Events-derived canonical transcripts (oracle-parity variant)."""

@@ -200,7 +200,7 @@ def test_multimodal_plumbing(spark):
     assert all(fs2[m] == (n + 1) // 2 for m, n in metas.items())  # stride-2 sampling
 
 
-def test_jaccard_candidates_bound_the_join(spark, docs_with_dups):
+def test_jaccard_candidates_bound_the_join(spark, docs_with_dups, dedup_materialized):
     """The candidate set must bound the inverted-index self-join BEFORE it
     runs (left-semi to the candidate doc ids), not just filter pairs after
     the aggregate — and results must equal the unbounded path intersected
@@ -208,9 +208,7 @@ def test_jaccard_candidates_bound_the_join(spark, docs_with_dups):
     sig = minhash_signature(docs_with_dups, num_hashes=8)
     cand = lsh_candidates(sig, num_hashes=8, bands=4)
     out = jaccard_pairs(docs_with_dups, threshold=0.5, candidates=cand)
-    # owned_result truncates the returned frame's lineage to a LogicalRDD;
-    # the plan gate inspects the un-truncated producing plan it exposes
-    plan = out.pre_checkpoint._jdf.queryExecution().optimizedPlan().toString()
+    plan = dedup_materialized[-1]._jdf.queryExecution().optimizedPlan().toString()
     assert "LeftSemi" in plan
     got = {(r.doc_a, r.doc_b, r.jaccard) for r in out.collect()}
     unbounded = {
@@ -482,7 +480,7 @@ def test_dup_clusters_chain_linear_plan_growth(spark):
 
 
 def test_no_lingering_caches_after_queries(spark):
-    """Cache-lifecycle contract (caching.owned_result): every query whose
+    """Cache-lifecycle contract (caching.materialize): every query whose
     plan persists intermediates frees them once its result materializes —
     after the consuming action + result.unpersist(), the session holds no
     NEW persistent RDDs (pre-existing fixture caches are excluded)."""
@@ -501,6 +499,9 @@ def test_no_lingering_caches_after_queries(spark):
         "pipeline_metrics_dp_records",
         "pipeline_metrics_exp_hist_merge",
         "pipeline_trace_records",
+        "doc_leakage_free_split",
+        "doc_clean_corpus_near",
+        "emb_dup_clusters",
     ]:
         before = set(sc._jsc.getPersistentRDDs().keys())
         res = entry.QUERIES[name](spark, sf_dir)

@@ -185,6 +185,8 @@ def test_exp_histogram_rollup_pair_matches_two_calls(spark):
         "metric_name string, metric_unit string, turn_idx int, metric_value long",
     )
     gate = F.col("turn_idx") % 2 == 0
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keys())
     fused = exp_histogram_rollup_pair(df, gate, (36, 1), (18, 0))
     fine = exp_histogram_rollup(df.where(gate), max_buckets=36, scale=1)
     coarse = exp_histogram_rollup(df.where(~gate), max_buckets=18, scale=0)
@@ -194,6 +196,10 @@ def test_exp_histogram_rollup_pair_matches_two_calls(spark):
     want = {tuple(r[k] for k in key): r.asDict() for r in ref.collect()}
     assert got == want
     fused.unpersist()
+    assert set(sc._jsc.getPersistentRDDs().keys()) - before == set()
+    # swapped specs are rejected by the spec check, not by a negative shift
+    with pytest.raises(ValueError, match="lossless downscale"):
+        exp_histogram_rollup_pair(df, gate, (18, 0), (36, 1))
 
 
 def test_exp_histogram_rollup_floors_doubles(spark):

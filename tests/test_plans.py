@@ -319,7 +319,7 @@ def test_bm25_filters_tokens_before_joins(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_incremental_dedup_no_cartesian(spark):
+def test_incremental_dedup_no_cartesian(spark, dedup_materialized):
     """The ingestion gate must never produce a cartesian/nested-loop pair
     scan — band buckets and fingerprints drive every comparison."""
     from otel_arrow_adapter_spark.functions.dedup import incremental_dedup
@@ -328,9 +328,7 @@ def test_incremental_dedup_no_cartesian(spark):
     out = incremental_dedup(
         d.where(F.col("doc_id") % 3 != 0), d.where(F.col("doc_id") % 3 == 0)
     )
-    # inspect the un-truncated producing plan (owned_result returns a
-    # lineage-truncated frame whose own plan is a flat LogicalRDD)
-    plan = _plan(out.pre_checkpoint)
+    plan = _plan(dedup_materialized[-1])
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     out.unpersist()

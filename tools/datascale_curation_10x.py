@@ -144,6 +144,7 @@ def op_bigram(docs: DataFrame) -> int:
 
 
 def main() -> None:
+    from otel_arrow_adapter_spark.caching import materialize
     from otel_arrow_adapter_spark.session import get_spark
 
     spark = get_spark(app_name="datascale-curation-10x", cores=CPUS, shuffle_partitions=CPUS)
@@ -157,8 +158,8 @@ def main() -> None:
     }
     result: dict = {"probe": "data_scale_10x_curation", "cores": CPUS, "sf": SF_DIR, "ops": {}}
     for scale, tag in ((1, "1x"), (10, "10x")):
-        docs = docs_at_scale(spark, scale).localCheckpoint(eager=True)
-        emb = emb_at_scale(spark, scale).localCheckpoint(eager=True)
+        docs = materialize(docs_at_scale(spark, scale))
+        emb = materialize(emb_at_scale(spark, scale))
         n_docs, n_emb = docs.count(), emb.count()
         result[f"n_docs_{tag}"], result[f"n_emb_{tag}"] = n_docs, n_emb
         for name, (fn, kind) in ops.items():
@@ -171,10 +172,8 @@ def main() -> None:
             spark.catalog.clearCache()
             result["ops"].setdefault(name, {})[tag] = {"sec": wall, "out_rows": rows}
             print(f"  {name} {tag}: {wall}s ({rows} rows)", file=sys.stderr)
-        from otel_arrow_adapter_spark.caching import free_local_checkpoint
-
-        free_local_checkpoint(docs)
-        free_local_checkpoint(emb)
+        docs.unpersist()
+        emb.unpersist()
 
     for name, r in result["ops"].items():
         base = "n_emb" if name.startswith("emb") else "n_docs"
