@@ -15,7 +15,7 @@ import os
 import sys
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F, Window as W
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -37,11 +37,15 @@ from otel_arrow_adapter_spark.operators.encode import (  # noqa: E402
     delta_encode_parent_ids,
     with_encode_order,
 )
-from otel_arrow_adapter_spark.operators.metrics_dp import exp2_lower_bound  # noqa: E402
+from otel_arrow_adapter_spark.operators.metrics_dp import (  # noqa: E402
+    exp2_lower_bound,
+    exp_histogram_rollup,
+)
 from otel_arrow_adapter_spark.operators.normalize import (  # noqa: E402
     assign_surrogate_ids,
     stable_turn_order,
 )
+from otel_arrow_adapter_spark.sources import otlp_json, otlp_pb  # noqa: E402
 
 
 def _exp_hist_bucket_sql(max_buckets: int, scale: int) -> tuple[str, str]:
@@ -533,8 +537,6 @@ def q_pipeline_metrics_exp_hist_dp(spark: SparkSession, sf_dir: str) -> DataFram
     boundary comparisons and every output is integer-typed; arrays are
     rendered with array_join (to_json whitespace and double formatting are
     engine-version-dependent)."""
-    from otel_arrow_adapter_spark.operators.metrics_dp import exp_histogram_rollup
-
     pts = _metric_points(spark, sf_dir).withColumn(
         "value_delta", F.col("metric_value") - F.lit(1000)
     )
@@ -562,8 +564,6 @@ def q_pipeline_metrics_exp_hist_scale(spark: SparkSession, sf_dir: str) -> DataF
     exact integers from nested isqrt (metrics_dp.exp2_lower_bound), so both
     engines bucket by integer comparison only; 36 buckets cover the same
     value range as the scale-0/18 family."""
-    from otel_arrow_adapter_spark.operators.metrics_dp import exp_histogram_rollup
-
     pts = _metric_points(spark, sf_dir).withColumn(
         "value_delta", F.col("metric_value") - F.lit(1000)
     )
@@ -608,6 +608,9 @@ def q_pipeline_metrics_exp_hist_merge(spark: SparkSession, sf_dir: str) -> DataF
     # RDD instead of re-planning the scan->parse->rollup lineage (the
     # round-start plan repeated the parquet scan 24x,
     # plans/r06/*_before.txt)
+    # turn_idx is non-negative by construction (row_number() - 1 in
+    # TRANSCRIPTS_SQL_TEMPLATE, sequence(0, n_turns - 1) in the generator),
+    # so % 2 == 0 splits even/odd turns exactly; no pmod needed
     both = exp_histogram_rollup_pair(
         pts,
         F.col("turn_idx") % 2 == 0,
@@ -1528,10 +1531,7 @@ def q_events_latency_quantiles_sketch(spark: SparkSession, sf_dir: str) -> DataF
     provably contains the true quantile; the oracle maps the exact rank-q
     value to the same integer bucket edges, so the estimates match
     bit-for-bit. Value domain [0, ~600] -> max_buckets=12, no overflow."""
-    from otel_arrow_adapter_spark.operators.metrics_dp import (
-        exp_hist_quantiles,
-        exp_histogram_rollup,
-    )
+    from otel_arrow_adapter_spark.operators.metrics_dp import exp_hist_quantiles
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").where(F.col("value").isNotNull())
     eh = exp_histogram_rollup(
@@ -1552,82 +1552,44 @@ def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return frame_sample(media, every_n=2).select("media_id", "frame_idx")
 
 
-def q_pipeline_pb_capture_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S8 end-to-end, oracle-gated: log-classified turns -> OTLP .pb
-    capture files (distributed mapInPandas encoder, one
-    ExportLogsServiceRequest file per partition — the reference's dataset
-    format, real_logs_dataset.go:109-124) -> read_pb_logs wire decode ->
-    severity rollup. The oracle replays the rollup straight from the
-    transcripts, so equality holds iff encode∘decode == id on every frame
-    (wire format included). Workers write to driver-local tmp (local mode);
-    on a cluster the capture dir is shared storage. Capture files are named
-    by PARTITION ID (TaskContext), not uuid: a retried or speculatively
-    re-executed task overwrites its own file instead of duplicating the
-    partition's records; the capture dir is deterministic per sf_dir and
-    cleared at query start, so repeated runs reuse one dir instead of
-    accumulating mkdtemp leftovers."""
+# ---------------------------------------------------------------------------
+# OTLP capture round trips (S7/S8), oracle-gated. Each signal has ONE input
+# builder and ONE decoded-side rollup; its .pb and protojson queries differ
+# only in the codec module (same write(df, path) / read(spark, path)
+# surface). The oracles replay the rollups straight from the transcripts,
+# so equality holds iff encode∘decode == id on every value rolled up.
+# ---------------------------------------------------------------------------
+
+def _capture_dir(kind: str, sf_dir: str) -> str:
+    """Deterministic capture dir per (kind, sf_dir) under the local tmp dir;
+    both writers replace its contents, so repeated runs reuse one dir
+    instead of accumulating mkdtemp leftovers. Workers write to driver-local
+    tmp (local mode); on a cluster the capture dir is shared storage."""
     import hashlib
-    import shutil
     import tempfile
 
-    from otel_arrow_adapter_spark.sources.otlp_pb import (
-        encode_export_logs_request,
-        read_pb_logs,
+    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(), f"oaas_{kind}_{digest}")
+
+
+def _capture_logs(parsed: DataFrame) -> DataFrame:
+    """Log-classified turns as flat log rows plus a tool attribute (a null
+    map when the turn has no tool), sharded over 8 resource groups."""
+    return parsed.where(F.col("signal_type") == "log").select(
+        F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int").alias("res_idx"),
+        (F.col("log_ts_us") * 1000).alias("time_unix_nano"),
+        "severity_number",
+        "severity_text",
+        F.col("msg").alias("body"),
+        F.when(
+            F.col("tool").isNotNull(), F.create_map(F.lit("tool"), F.col("tool"))
+        ).alias("attrs"),
     )
 
-    logs = (
-        _parsed(spark, sf_dir)
-        .where(F.col("signal_type") == "log")
-        .select(
-            "severity_text",
-            "severity_number",
-            F.col("msg").alias("body"),
-            (F.col("log_ts_us") * 1000).alias("time_unix_nano"),
-        )
-    )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"oaas_pb_capture_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
 
-    def write_pb(batches):
-        import os
-
-        import pandas as pd
-        from pyspark import TaskContext
-
-        recs = []
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            clean = pdf.astype(object).where(pdf.notna(), None)
-            recs.extend(
-                {
-                    "res_idx": 0,
-                    "severity_text": r["severity_text"],
-                    "severity_number": None
-                    if r["severity_number"] is None
-                    else int(r["severity_number"]),
-                    "body": r["body"],
-                    "time_unix_nano": None
-                    if r["time_unix_nano"] is None
-                    else int(r["time_unix_nano"]),
-                }
-                for r in clean.to_dict("records")
-            )
-        if recs:
-            # one file per partition, deterministic name: a task retry
-            # OVERWRITES its own output instead of adding a duplicate
-            pid = TaskContext.get().partitionId()
-            with open(os.path.join(out, f"part-{pid:05d}.pb"), "wb") as f:
-                f.write(encode_export_logs_request(recs))
-        yield pd.DataFrame({"n": [len(recs)]})
-
-    logs.mapInPandas(write_pb, "n long").agg(F.sum("n")).collect()  # write action
-    decoded = read_pb_logs(spark, out)
-    return decoded.groupBy("severity_text").agg(
+def _log_rollup(dec: DataFrame, *extra_aggs: Column) -> DataFrame:
+    """Severity rollup over the DECODED log rows."""
+    return dec.where(F.col("res_idx") >= 0).groupBy("severity_text").agg(
         F.count(F.lit(1)).alias("n"),
         F.count("body").alias("n_body"),
         # modular sum: raw nanosecond sums overflow int64 at a few thousand
@@ -1635,125 +1597,39 @@ def q_pipeline_pb_capture_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
         F.sum(F.col("time_unix_nano") % F.lit(1_000_003)).cast("long").alias("sum_ts_mod"),
         F.max("time_unix_nano").cast("long").alias("max_ts"),
         F.max("severity_number").cast("int").alias("max_sev"),
+        *extra_aggs,
     )
 
 
-def q_pipeline_pb_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S8 metrics fidelity, oracle-gated (VERDICT r4 next-round #4 done
-    criterion): metric-classified turns -> exp-histogram rollup WITH sparse
-    bucket offsets -> OTLP .pb capture (ExponentialHistogramDataPoint:
-    zigzag scale, zero_count, offset-bearing positive/negative buckets,
-    one attribute per DP) -> read_pb_metrics wire decode -> the decoded
-    fields themselves. The oracle computes the same rollup straight from
-    the transcripts in SQL, so equality holds iff pb encode∘decode == id
-    on every exp-hist field INCLUDING offsets and the attr VALUE (the
-    reader surfaces DP attr key/values as a map, not just a count) — the
-    r4 ADVICE failure (exp-hist DPs decoded with the NumberDP layout)
-    would turn every row into garbage here."""
-    import hashlib
-    import shutil
-    import tempfile
+def q_pipeline_pb_capture_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Logs -> OTLP .pb capture (one ExportLogsServiceRequest file per
+    partition, the reference's dataset format, real_logs_dataset.go:109-124)
+    -> read_pb_logs wire decode -> severity rollup."""
+    out = _capture_dir("pb_capture", sf_dir)
+    otlp_pb.write_pb_logs(_capture_logs(_parsed(spark, sf_dir)), out)
+    return _log_rollup(otlp_pb.read_pb_logs(spark, out))
 
-    from otel_arrow_adapter_spark.operators.metrics_dp import exp_histogram_rollup
-    from otel_arrow_adapter_spark.sources.otlp_pb import (
-        encode_export_metrics_request,
-        read_pb_metrics,
-    )
 
-    pts = _metric_points(spark, sf_dir).withColumn(
-        "value_delta", F.col("metric_value") - F.lit(1000)
-    )
-    eh = exp_histogram_rollup(pts, max_buckets=18, value_col="value_delta").select(
-        "metric_name",
-        "metric_unit",
-        "count",
-        "sum",
-        "scale",
-        "zero_count",
-        "positive_offset",
-        F.array_join("positive_bucket_counts", ",").alias("pos_csv"),
-        "negative_offset",
-        F.array_join("negative_bucket_counts", ",").alias("neg_csv"),
-    )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"oaas_pb_mcapture_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-
-    def write_pb(batches):
-        import os
-
-        import pandas as pd
-        from pyspark import TaskContext
-
-        recs = []
-        for pdf in batches:
-            for r in pdf.to_dict("records"):
-                recs.append(
-                    {
-                        "res_idx": 0,
-                        "metric_name": r["metric_name"],
-                        "metric_unit": r["metric_unit"],
-                        "metric_type": "exponential_histogram",
-                        "time_unix_nano": 1_700_000_000_000_000_000,
-                        "count": int(r["count"]),
-                        "sum": float(r["sum"]),
-                        "scale": int(r["scale"]),
-                        "zero_count": int(r["zero_count"]),
-                        "positive_offset": int(r["positive_offset"]),
-                        "positive_bucket_counts": r["pos_csv"] or None,
-                        "negative_offset": int(r["negative_offset"]),
-                        "negative_bucket_counts": r["neg_csv"] or None,
-                        "attrs": {"unit": r["metric_unit"] or ""},
-                    }
-                )
-        if recs:
-            pid = TaskContext.get().partitionId()
-            with open(os.path.join(out, f"part-{pid:05d}.pb"), "wb") as f:
-                f.write(encode_export_metrics_request(recs))
-        yield pd.DataFrame({"n": [len(recs)]})
-
-    eh.mapInPandas(write_pb, "n long").agg(F.sum("n")).collect()  # write action
-    decoded = read_pb_metrics(spark, out)
-    return decoded.where(F.col("res_idx") >= 0).select(
-        "metric_name",
-        "metric_unit",
-        "count",
-        F.col("sum").cast("double").alias("sum"),
-        "scale",
-        "zero_count",
-        "positive_offset",
-        F.coalesce("positive_bucket_counts", F.lit("")).alias("positive_bucket_counts"),
-        "negative_offset",
-        F.coalesce("negative_bucket_counts", F.lit("")).alias("negative_bucket_counts"),
-        "n_attrs",
-        F.col("attrs")["unit"].alias("attr_unit"),
+def q_pipeline_otlp_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The protojson sibling of pipeline_pb_capture_roundtrip, ZERO Python:
+    line-sharded ExportLogsServiceRequest JSON via to_json, from_json
+    decode, and the same severity rollup plus the decoded tool attribute."""
+    out = _capture_dir("json_capture", sf_dir)
+    otlp_json.write_otlp_json_logs(_capture_logs(_parsed(spark, sf_dir)), out)
+    tool = F.try_element_at("attrs", F.lit("tool"))
+    return _log_rollup(
+        otlp_json.read_otlp_json_logs(spark, out),
+        F.count(tool).cast("long").alias("n_tool"),
+        F.max(tool).alias("max_tool"),
     )
 
 
-def q_pipeline_otlp_json_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The protojson sibling of pipeline_pb_metrics_roundtrip, ZERO
-    Python: the same offset-bearing exp-histogram rollup is captured as
-    line-sharded ExportMetricsServiceRequest JSON (uint64-as-string,
-    positive/negative DataPointBuckets with offsets) via to_json, decoded
-    with from_json, and the decoded fields returned. Shares the .pb
-    sibling's oracle verbatim — equality iff protojson encode∘decode == id
-    on every exp-hist field including offsets and the attr value."""
-    import hashlib
-    import tempfile
-
-    from otel_arrow_adapter_spark.operators.metrics_dp import exp_histogram_rollup
-    from otel_arrow_adapter_spark.sources.otlp_json import (
-        read_otlp_json_metrics,
-        write_otlp_json_metrics,
-    )
-
-    pts = _metric_points(spark, sf_dir).withColumn(
-        "value_delta", F.col("metric_value") - F.lit(1000)
-    )
-    eh = exp_histogram_rollup(pts, max_buckets=18, value_col="value_delta").select(
+def _capture_exp_hists(pts: DataFrame) -> DataFrame:
+    """Metric points -> exp-histogram rollup WITH sparse bucket offsets, as
+    flat ExponentialHistogramDataPoint rows (zigzag scale, zero_count,
+    offset-bearing positive/negative buckets, one attribute per DP)."""
+    pts = pts.withColumn("value_delta", F.col("metric_value") - F.lit(1000))
+    return exp_histogram_rollup(pts, max_buckets=18, value_col="value_delta").select(
         F.lit(0).alias("res_idx"),
         "metric_name",
         F.coalesce("metric_unit", F.lit("")).alias("metric_unit"),
@@ -1775,13 +1651,13 @@ def q_pipeline_otlp_json_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> 
             F.lit("unit"), F.coalesce("metric_unit", F.lit(""))
         ).alias("attrs"),
     )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"oaas_json_mcapture_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    write_otlp_json_metrics(eh, out)  # overwrite mode: idempotent re-runs
-    decoded = read_otlp_json_metrics(spark, out)
-    return decoded.where(F.col("res_idx") >= 0).select(
+
+
+def _exp_hist_fields(dec: DataFrame) -> DataFrame:
+    """The DECODED exp-hist fields themselves, offsets and the attr VALUE
+    included (the r4 ADVICE failure — exp-hist DPs decoded with the
+    NumberDP layout — turns every row into garbage here)."""
+    return dec.where(F.col("res_idx") >= 0).select(
         "metric_name",
         "metric_unit",
         "count",
@@ -1797,198 +1673,26 @@ def q_pipeline_otlp_json_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> 
     )
 
 
-def q_pipeline_otlp_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7/S8 OTLP-JSON capture fidelity, oracle-gated, ZERO Python in the
-    data path: log-classified turns (+ a tool attribute) -> line-sharded
-    ExportLogsServiceRequest capture via to_json (protojson rendering,
-    requests sharded at resource grain) -> from_json decode -> severity
-    rollup over the DECODED values including the attr map. The protojson
-    sibling of pipeline_pb_capture_roundtrip — same oracle family (replayed
-    straight from the transcripts), so equality holds iff
-    encode∘decode == id; unlike the .pb path there is no mapInPandas
-    anywhere, both codec directions are JVM Jackson inside the plan."""
-    import hashlib
-    import tempfile
-
-    from otel_arrow_adapter_spark.sources.otlp_json import (
-        read_otlp_json_logs,
-        write_otlp_json_logs,
-    )
-
-    logs = (
-        _parsed(spark, sf_dir)
-        .where(F.col("signal_type") == "log")
-        .select(
-            F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int").alias("res_idx"),
-            (F.col("log_ts_us") * 1000).alias("time_unix_nano"),
-            "severity_number",
-            "severity_text",
-            F.col("msg").alias("body"),
-            F.when(
-                F.col("tool").isNotNull(), F.create_map(F.lit("tool"), F.col("tool"))
-            ).alias("attrs"),
-        )
-    )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"oaas_json_capture_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    write_otlp_json_logs(logs, out)  # overwrite mode: idempotent re-runs
-    dec = read_otlp_json_logs(spark, out).where(F.col("res_idx") >= 0)
-    return dec.groupBy("severity_text").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count("body").alias("n_body"),
-        F.sum(F.col("time_unix_nano") % F.lit(1_000_003)).cast("long").alias("sum_ts_mod"),
-        F.max("time_unix_nano").cast("long").alias("max_ts"),
-        F.max("severity_number").cast("int").alias("max_sev"),
-        F.count(F.try_element_at("attrs", F.lit("tool"))).cast("long").alias("n_tool"),
-        F.max(F.try_element_at("attrs", F.lit("tool"))).alias("max_tool"),
-    )
+def q_pipeline_pb_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exp-histogram DPs -> OTLP .pb capture -> read_pb_metrics wire decode
+    -> the decoded fields (VERDICT r4 next-round #4 done criterion)."""
+    out = _capture_dir("pb_mcapture", sf_dir)
+    otlp_pb.write_pb_metrics(_capture_exp_hists(_metric_points(spark, sf_dir)), out)
+    return _exp_hist_fields(otlp_pb.read_pb_metrics(spark, out))
 
 
-def q_pipeline_pb_traces_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S8 traces fidelity, oracle-gated: trace-classified turns -> span rows
-    with lifecycle events, a parent link and one attribute -> OTLP .pb
-    capture (distributed mapInPandas encoder, one ExportTraceServiceRequest
-    file per partition — real_traces_dataset.go family) -> read_pb_spans
-    wire decode -> a rollup computed from the DECODED event/link/attr
-    VALUES (not the reader's convenience counts). The oracle replays the
-    same rollup straight from the transcripts, so equality holds iff pb
-    encode∘decode == id on ids, kind, status, both timestamps, event
-    names+times, link trace/span ids and the attr value. Capture files are
-    partition-id-named (retry-idempotent) in a deterministic per-sf dir
-    cleared at query start, like the logs/metrics siblings."""
-    import hashlib
-    import shutil
-    import tempfile
-
-    from otel_arrow_adapter_spark.sources.otlp_pb import (
-        encode_export_trace_request,
-        read_pb_spans,
-    )
-
-    mod = 1_000_003
-    spans_in = (
-        _trace_points(spark, sf_dir)
-        .select(
-            "conv_id",
-            F.md5(F.col("conv_id")).alias("trace_hex"),
-            F.col("span_hex"),
-            F.when(
-                F.col("parent_hex").isNotNull(), F.lpad("parent_hex", 16, "0")
-            ).alias("parent16"),
-            F.concat(F.lit("op-"), F.col("conv_id")).alias("name"),
-            (F.col("turn_idx") % 4 + 1).cast("int").alias("kind"),
-            (F.unix_micros(F.col("ts").cast("timestamp")) * 1000).alias("start_ns"),
-            F.col("dur_ms").cast("long").alias("dur_ms"),
-        )
-    )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"oaas_pb_tcapture_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-
-    def write_pb(batches):
-        import os
-
-        import pandas as pd
-        from pyspark import TaskContext
-
-        recs = []
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            clean = pdf.astype(object).where(pdf.notna(), None)
-            for r in clean.to_dict("records"):
-                start_ns = int(r["start_ns"])
-                dur = None if r["dur_ms"] is None else int(r["dur_ms"])
-                events = [{"time_unix_nano": start_ns, "name": "span.start"}]
-                end_ns = None
-                status = None
-                if dur is not None:
-                    end_ns = start_ns + dur * 1_000_000
-                    events.append({"time_unix_nano": end_ns, "name": "span.end"})
-                    status = dur % 3
-                links = (
-                    []
-                    if r["parent16"] is None
-                    else [{"trace_id": r["trace_hex"], "span_id": r["parent16"]}]
-                )
-                recs.append(
-                    {
-                        "res_idx": 0,
-                        "trace_id": r["trace_hex"],
-                        "span_id": r["span_hex"],
-                        "parent_span_id": r["parent16"],
-                        "name": r["name"],
-                        "kind": int(r["kind"]),
-                        "start_time_unix_nano": start_ns,
-                        "end_time_unix_nano": end_ns,
-                        "status_code": status,
-                        "attrs": {"conv": r["conv_id"]},
-                        "events": events,
-                        "links": links,
-                    }
-                )
-        if recs:
-            pid = TaskContext.get().partitionId()
-            with open(os.path.join(out, f"part-{pid:05d}.pb"), "wb") as f:
-                f.write(encode_export_trace_request(recs))
-        yield pd.DataFrame({"n": [len(recs)]})
-
-    spans_in.mapInPandas(write_pb, "n long").agg(F.sum("n")).collect()  # write action
-    dec = read_pb_spans(spark, out).where(F.col("res_idx") >= 0)
-    first_link = F.try_element_at("links", F.lit(1))
-    return dec.groupBy(F.col("kind").cast("int").alias("kind")).agg(
-        F.count(F.lit(1)).alias("n_spans"),
-        F.sum(F.size("events")).cast("long").alias("n_events"),
-        F.sum(
-            F.size(F.filter("events", lambda e: e["name"] == F.lit("span.end")))
-        ).cast("long").alias("n_end_events"),
-        F.sum(F.col("start_time_unix_nano") % mod).cast("long").alias("sum_start_mod"),
-        F.sum(
-            F.aggregate(
-                "events",
-                F.lit(0).cast("long"),
-                lambda a, e: a + e["time_unix_nano"] % mod,
-            )
-        ).cast("long").alias("sum_event_ts_mod"),
-        F.sum(F.coalesce(F.col("status_code"), F.lit(0))).cast("long").alias("sum_status"),
-        F.sum(F.size("links")).cast("long").alias("n_links"),
-        F.countDistinct(first_link["trace_id"]).alias("n_link_traces"),
-        F.max(first_link["span_id"]).alias("max_link_span"),
-        F.max("name").alias("max_name"),
-        F.sum(
-            F.when(
-                F.try_element_at("attrs", F.lit("conv"))
-                == F.regexp_replace("name", "^op-", ""),
-                1,
-            ).otherwise(0)
-        ).cast("long").alias("n_attr_conv_match"),
-    )
+def q_pipeline_otlp_json_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The protojson sibling of pipeline_pb_metrics_roundtrip, ZERO Python
+    (uint64-as-string, DataPointBuckets with offsets); shares its oracle."""
+    out = _capture_dir("json_mcapture", sf_dir)
+    otlp_json.write_otlp_json_metrics(_capture_exp_hists(_metric_points(spark, sf_dir)), out)
+    return _exp_hist_fields(otlp_json.read_otlp_json_metrics(spark, out))
 
 
-def q_pipeline_otlp_json_traces_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The protojson sibling of pipeline_pb_traces_roundtrip, ZERO Python
-    anywhere: the same span rows (lifecycle events, parent link, conv
-    attr) are built as pure column expressions, captured as line-sharded
-    ExportTraceServiceRequest JSON via to_json, decoded with from_json,
-    and rolled up from the DECODED values. Shares the .pb sibling's oracle
-    verbatim — equality holds iff protojson encode∘decode == id on ids,
-    kind, status, both timestamps, event names+times, link ids and the
-    attr value."""
-    import hashlib
-    import tempfile
-
-    from otel_arrow_adapter_spark.sources.otlp_json import (
-        read_otlp_json_spans,
-        write_otlp_json_spans,
-    )
-
-    mod = 1_000_003
-    tp = _trace_points(spark, sf_dir)
+def _capture_spans(tp: DataFrame) -> DataFrame:
+    """Trace points -> flat span rows as pure column expressions: lifecycle
+    events (start, plus end when the duration is known), a parent link
+    (empty array for roots) and one conv attribute."""
     start_ns = F.unix_micros(F.col("ts").cast("timestamp")) * 1000
     dur = F.col("dur_ms").cast("long")
     end_ns = F.when(dur.isNotNull(), start_ns + dur * 1_000_000)
@@ -1996,15 +1700,14 @@ def q_pipeline_otlp_json_traces_roundtrip(spark: SparkSession, sf_dir: str) -> D
     parent16 = F.when(F.col("parent_hex").isNotNull(), F.lpad("parent_hex", 16, "0"))
     ev = F.struct(start_ns.alias("time_unix_nano"), F.lit("span.start").alias("name"))
     ev_end = F.struct(end_ns.alias("time_unix_nano"), F.lit("span.end").alias("name"))
-    spans_in = tp.select(
+    return tp.select(
         # shard the capture across 8 resource groups (same scheme as the
-        # logs sibling): res_idx=0 put EVERY span into one collect_list
-        # group = one write task building one giant request line, and one
-        # read task parsing it — measured 2.6x wall at 10x events while
-        # every sibling stayed ~1.2-1.3x. The reader derives res_idx as
-        # the position WITHIN each request (0 for all good rows either
-        # way) and the final rollup groups by kind only, so results are
-        # identical; only the request sharding changes.
+        # logs builder): res_idx=0 put EVERY span into one protojson
+        # collect_list group = one write task building one giant request
+        # line, and one read task parsing it — measured 2.6x wall at 10x
+        # events while every sibling stayed ~1.2-1.3x. The readers derive
+        # res_idx as the position WITHIN each request and the rollup groups
+        # by kind only, so results do not depend on the sharding.
         F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int").alias("res_idx"),
         trace_hex.alias("trace_id"),
         F.col("span_hex").alias("span_id"),
@@ -2023,14 +1726,15 @@ def q_pipeline_otlp_json_traces_roundtrip(spark: SparkSession, sf_dir: str) -> D
             F.array().cast("array<struct<trace_id:string,span_id:string>>")
         ).alias("links"),
     )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"oaas_json_tcapture_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    write_otlp_json_spans(spans_in, out)  # overwrite mode: idempotent re-runs
-    dec = read_otlp_json_spans(spark, out).where(F.col("res_idx") >= 0)
+
+
+def _span_rollup(dec: DataFrame) -> DataFrame:
+    """Per-kind rollup computed from the DECODED event/link/attr VALUES
+    (not the readers' convenience counts): ids, kind, status, both
+    timestamps, event names+times, link trace/span ids and the attr value."""
+    mod = 1_000_003
     first_link = F.try_element_at("links", F.lit(1))
-    return dec.groupBy(F.col("kind").cast("int").alias("kind")).agg(
+    return dec.where(F.col("res_idx") >= 0).groupBy(F.col("kind").cast("int").alias("kind")).agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.sum(F.size("events")).cast("long").alias("n_events"),
         F.sum(
@@ -2059,12 +1763,29 @@ def q_pipeline_otlp_json_traces_roundtrip(spark: SparkSession, sf_dir: str) -> D
     )
 
 
+def q_pipeline_pb_traces_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spans -> OTLP .pb capture (one ExportTraceServiceRequest file per
+    partition, real_traces_dataset.go family) -> read_pb_spans wire decode
+    -> per-kind rollup of the decoded values."""
+    out = _capture_dir("pb_tcapture", sf_dir)
+    otlp_pb.write_pb_spans(_capture_spans(_trace_points(spark, sf_dir)), out)
+    return _span_rollup(otlp_pb.read_pb_spans(spark, out))
+
+
+def q_pipeline_otlp_json_traces_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The protojson sibling of pipeline_pb_traces_roundtrip, ZERO Python
+    anywhere; shares its oracle."""
+    out = _capture_dir("json_tcapture", sf_dir)
+    otlp_json.write_otlp_json_spans(_capture_spans(_trace_points(spark, sf_dir)), out)
+    return _span_rollup(otlp_json.read_otlp_json_spans(spark, out))
+
+
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal feature extraction via mapInPandas (decode STUBBED with a
+    """Multimodal feature extraction via a pandas map UDF (decode STUBBED with a
     deterministic payload-hash fake — real PIL/ffmpeg swap-in point). The
     fake is exact integer/65535.0 double arithmetic, so even the stub is
     DuckDB-oracle-checked (sha256∘sha256 replayed in SQL); the Spark-side
-    plumbing under test — schema, Arrow batches, mapInPandas — is real."""
+    plumbing under test — schema, Arrow batches, the pandas UDF — is real."""
     from otel_arrow_adapter_spark.functions.multimodal import extract_features, synthesize_media
 
     media = synthesize_media(spark, n=200)

@@ -8,5 +8,8 @@ from .otlp_pb import (  # noqa: F401
     read_pb_logs,
     read_pb_metrics,
     read_pb_spans,
+    write_pb_logs,
+    write_pb_metrics,
+    write_pb_spans,
 )
 from .readers import read_table, read_transcripts  # noqa: F401

@@ -22,20 +22,30 @@ OTLP field numbers (opentelemetry-proto logs.proto / common.proto):
   KeyValue:      key = 1, value = 2
   AnyValue:      string=1, bool=2, int=3, double=4, bytes=7
 
-Spark plumbing: ``spark.read.format("binaryFile")`` gives (path, content)
-rows — one per capture file — and a mapInPandas decoder flattens each
-file's request into log-record rows. Parallelism unit = file, exactly the
-reference's dataset granularity; no per-row Python beyond the per-FILE
-decode, which is the irreducible work. An encoder is included (the file
-exporter's capture analog) so round-trips are testable end-to-end.
+Spark plumbing, one writer and one reader for all three signals:
+
+- ``write_pb_logs/spans/metrics(df, path)`` clear ``path`` and run one
+  ``mapInArrow`` pass: each non-empty partition's Arrow batches become
+  rows (``RecordBatch.to_pylist``, ints stay ints, nulls stay None) and
+  one ``part-<partitionId>.pb`` request — the file exporter's capture
+  analog, retry-idempotent by name.
+- ``read_pb_logs/spans/metrics(spark, path)`` scan ``binaryFile`` (one row
+  per capture file) and decode each file's request in ``mapInPandas`` into
+  flat rows; a malformed file becomes one quarantine row. Parallelism unit
+  = file, exactly the reference's dataset granularity; the per-FILE decode
+  is the only per-row Python.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import struct
-from typing import Iterator
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 PB_LOG_SCHEMA = (
     "path string, res_idx int, scope_name string, scope_version string, "
@@ -797,117 +807,115 @@ def encode_export_metrics_request(points: list[dict]) -> bytes:
     return bytes(out)
 
 
-def read_pb_metrics(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed metrics-capture load (binaryFile + mapInPandas, one
-    ExportMetricsServiceRequest per file; decode errors quarantine)."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
+# ---------------------------------------------------------------------------
+# Spark plumbing: one capture writer, one capture reader
+# ---------------------------------------------------------------------------
 
-    cols = [
-        "path", "res_idx", "scope_name", "metric_name", "metric_unit",
-        "metric_type", "temporality", "is_monotonic",
-        "start_time_unix_nano", "time_unix_nano", "value_double",
-        "value_int", "count", "sum", "bucket_counts", "explicit_bounds",
-        "n_attrs", "scale", "zero_count", "positive_offset",
-        "positive_bucket_counts", "negative_offset",
-        "negative_bucket_counts", "quantiles", "attrs",
-    ]
+def _write_pb(df: DataFrame, path: str, encode: Callable[[list[dict]], bytes]) -> int:
+    """Clear ``path``, then write one ``part-<partitionId>.pb`` request per
+    non-empty partition of ``df``; returns the rows written. Named by
+    partition id, not uuid, so a retried or speculative task overwrites its
+    own file. Workers write to ``path`` directly: on a cluster it must be
+    storage every executor shares."""
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path, exist_ok=True)
 
-    def decode(batches):
+    def write(batches):
+        import pyarrow as pa  # noqa: PLC0415 — worker-side import
+        from pyspark import TaskContext  # noqa: PLC0415
+
+        # to_pylist keeps ints as ints and nulls as None; only maps need a
+        # fix-up, arriving as (key, value) lists
+        recs: list[dict] = []
+        for batch in batches:
+            maps = [f.name for f in batch.schema if pa.types.is_map(f.type)]
+            for r in batch.to_pylist():
+                for k in maps:
+                    if r[k] is not None:
+                        r[k] = dict(r[k])
+                recs.append(r)
+        if recs:
+            pid = TaskContext.get().partitionId()
+            with open(os.path.join(path, f"part-{pid:05d}.pb"), "wb") as f:
+                f.write(encode(recs))
+        yield pa.RecordBatch.from_pydict({"n": pa.array([len(recs)], pa.int64())})
+
+    return df.mapInArrow(write, "n long").agg(F.sum("n")).first()[0] or 0
+
+
+def write_pb_logs(df: DataFrame, path: str) -> int:
+    """Flat log rows (``encode_export_logs_request`` keys) -> .pb capture."""
+    return _write_pb(df, path, encode_export_logs_request)
+
+
+def write_pb_spans(df: DataFrame, path: str) -> int:
+    """Flat span rows (``encode_export_trace_request`` keys, events and
+    links as arrays of structs) -> .pb capture."""
+    return _write_pb(df, path, encode_export_trace_request)
+
+
+def write_pb_metrics(df: DataFrame, path: str) -> int:
+    """Flat DP rows (``encode_export_metrics_request`` keys) -> .pb capture."""
+    return _write_pb(df, path, encode_export_metrics_request)
+
+
+def _read_pb(
+    spark: SparkSession,
+    path: str,
+    decode: Callable[[bytes, str], list[dict]],
+    schema: str,
+    err_col: str,
+) -> DataFrame:
+    """binaryFile scan (one row per capture file, Spark splits files across
+    tasks) -> mapInPandas decode. A malformed file yields one path-tagged
+    quarantine row (res_idx -1, the error in ``err_col``, counts 0, maps and
+    arrays empty) instead of crashing the task — error-not-crash, the reader
+    counterpart of logs.go:145-154. Column list and quarantine defaults both
+    come from ``schema``."""
+    fields = StructType.fromDDL(schema).fields
+    cols = [f.name for f in fields]
+    quarantine: dict = {"res_idx": -1}
+    for f in fields:
+        if f.name.startswith("n_"):
+            quarantine[f.name] = 0
+        elif isinstance(f.dataType, MapType):
+            quarantine[f.name] = {}
+        elif isinstance(f.dataType, ArrayType):
+            quarantine[f.name] = []
+
+    def run(batches):
+        import pandas as pd  # noqa: PLC0415 — worker-side import
+
         for pdf in batches:
             rows: list[dict] = []
             for path_, content in zip(pdf["path"], pdf["content"]):
                 try:
-                    rows.extend(decode_export_metrics_request(bytes(content), path_))
+                    rows.extend(decode(bytes(content), path_))
                 except Exception as e:  # noqa: BLE001 — quarantine, don't crash
                     rows.append(
-                        {"path": path_, "res_idx": -1,
-                         "metric_name": f"__decode_error__: {e}", "n_attrs": 0,
-                         "attrs": {}}
+                        {**quarantine, "path": path_, err_col: f"__decode_error__: {e}"}
                     )
-            yield pd.DataFrame(rows, columns=cols)
+            # object dtype: a nullable int64 column would otherwise infer
+            # float64 and round nanosecond timestamps above 2^53
+            yield pd.DataFrame(rows, columns=cols, dtype=object)
 
     binary = spark.read.format("binaryFile").option("pathGlobFilter", "*.pb").load(path)
-    return binary.select("path", "content").mapInPandas(decode, PB_METRIC_SCHEMA)
+    return binary.select("path", "content").mapInPandas(run, schema)
 
-
-# ---------------------------------------------------------------------------
-# Spark plumbing
-# ---------------------------------------------------------------------------
 
 def read_pb_logs(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed .pb dataset load: binaryFile scan (one row per capture
-    file, Spark splits files across tasks) -> mapInPandas decode. Malformed
-    files yield zero rows with the error surfaced in the ``body`` of a
-    single path-tagged quarantine row — error-not-crash, the reader
-    counterpart of logs.go:145-154."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    def decode(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    rows.extend(decode_export_logs_request(bytes(content), path_))
-                except Exception as e:  # noqa: BLE001 — quarantine, don't crash
-                    rows.append(
-                        {
-                            "path": path_,
-                            "res_idx": -1,
-                            "body": f"__decode_error__: {e}",
-                            "n_res_attrs": 0,
-                            "n_attrs": 0,
-                            "res_attrs": {},
-                            "attrs": {},
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "res_idx", "scope_name", "scope_version",
-                    "time_unix_nano", "observed_time_unix_nano",
-                    "severity_number", "severity_text", "body",
-                    "trace_id", "span_id", "n_res_attrs", "n_attrs",
-                    "res_attrs", "attrs",
-                ],
-            )
-
-    binary = spark.read.format("binaryFile").option("pathGlobFilter", "*.pb").load(path)
-    return binary.select("path", "content").mapInPandas(decode, PB_LOG_SCHEMA)
+    """.pb log capture -> PB_LOG_SCHEMA rows; errors land in ``body``."""
+    return _read_pb(spark, path, decode_export_logs_request, PB_LOG_SCHEMA, "body")
 
 
 def read_pb_spans(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed trace-capture load: same binaryFile + mapInPandas shape
-    as read_pb_logs, one ExportTraceServiceRequest per file."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
+    """.pb trace capture -> PB_SPAN_SCHEMA rows; errors land in ``name``."""
+    return _read_pb(spark, path, decode_export_trace_request, PB_SPAN_SCHEMA, "name")
 
-    cols = [
-        "path", "res_idx", "scope_name", "trace_id", "span_id",
-        "parent_span_id", "name", "kind", "start_time_unix_nano",
-        "end_time_unix_nano", "status_code", "n_attrs", "n_events", "n_links",
-        "attrs", "events", "links",
-    ]
 
-    def decode(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    rows.extend(decode_export_trace_request(bytes(content), path_))
-                except Exception as e:  # noqa: BLE001 — quarantine, don't crash
-                    rows.append(
-                        {
-                            "path": path_,
-                            "res_idx": -1,
-                            "name": f"__decode_error__: {e}",
-                            "n_attrs": 0,
-                            "n_events": 0,
-                            "n_links": 0,
-                            "attrs": {},
-                            "events": [],
-                            "links": [],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    binary = spark.read.format("binaryFile").option("pathGlobFilter", "*.pb").load(path)
-    return binary.select("path", "content").mapInPandas(decode, PB_SPAN_SCHEMA)
+def read_pb_metrics(spark: SparkSession, path: str) -> DataFrame:
+    """.pb metrics capture -> PB_METRIC_SCHEMA rows; errors land in
+    ``metric_name``."""
+    return _read_pb(
+        spark, path, decode_export_metrics_request, PB_METRIC_SCHEMA, "metric_name"
+    )

@@ -490,3 +490,331 @@ def test_pb_metrics_spark_reader(spark, tmp_path):
     bad = [r for r in rows if r["res_idx"] == -1]
     assert {r["metric_type"] for r in good} == {"gauge", "sum", "histogram"}
     assert len(bad) == 1 and "__decode_error__" in bad[0]["metric_name"]
+
+
+# ---------------------------------------------------------------------------
+# write_pb_* differential: input builder + capture writer against the
+# per-query mapInPandas closures they replaced (kept here as the reference)
+# ---------------------------------------------------------------------------
+
+def _closure_capture(df, out, to_record, encode):
+    """The replaced form: mapInPandas, pandas NaN -> None, per-field record
+    coercion in Python, one part-<partitionId>.pb file per non-empty
+    partition."""
+    import os
+    import sys
+
+    from pyspark import cloudpickle
+    from pyspark.sql import functions as F
+
+    # the record builders below live in this test module, which workers
+    # cannot import: ship them by value
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    os.makedirs(out, exist_ok=True)
+
+    def write_pb(batches):
+        import os
+
+        import pandas as pd
+        from pyspark import TaskContext
+
+        recs = []
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            clean = pdf.astype(object).where(pdf.notna(), None)
+            recs.extend(to_record(r) for r in clean.to_dict("records"))
+        if recs:
+            pid = TaskContext.get().partitionId()
+            with open(os.path.join(out, f"part-{pid:05d}.pb"), "wb") as f:
+                f.write(encode(recs))
+        yield pd.DataFrame({"n": [len(recs)]})
+
+    df.mapInPandas(write_pb, "n long").agg(F.sum("n")).collect()
+
+
+def _old_log_record(r):
+    return {
+        "res_idx": 0,
+        "severity_text": r["severity_text"],
+        "severity_number": None
+        if r["severity_number"] is None
+        else int(r["severity_number"]),
+        "body": r["body"],
+        "time_unix_nano": None
+        if r["time_unix_nano"] is None
+        else int(r["time_unix_nano"]),
+    }
+
+
+def _old_exp_hist_record(r):
+    return {
+        "res_idx": 0,
+        "metric_name": r["metric_name"],
+        "metric_unit": r["metric_unit"],
+        "metric_type": "exponential_histogram",
+        "time_unix_nano": 1_700_000_000_000_000_000,
+        "count": int(r["count"]),
+        "sum": float(r["sum"]),
+        "scale": int(r["scale"]),
+        "zero_count": int(r["zero_count"]),
+        "positive_offset": int(r["positive_offset"]),
+        "positive_bucket_counts": r["pos_csv"] or None,
+        "negative_offset": int(r["negative_offset"]),
+        "negative_bucket_counts": r["neg_csv"] or None,
+        "attrs": {"unit": r["metric_unit"] or ""},
+    }
+
+
+def _old_span_record(r):
+    start_ns = int(r["start_ns"])
+    dur = None if r["dur_ms"] is None else int(r["dur_ms"])
+    events = [{"time_unix_nano": start_ns, "name": "span.start"}]
+    end_ns = None
+    status = None
+    if dur is not None:
+        end_ns = start_ns + dur * 1_000_000
+        events.append({"time_unix_nano": end_ns, "name": "span.end"})
+        status = dur % 3
+    links = (
+        []
+        if r["parent16"] is None
+        else [{"trace_id": r["trace_hex"], "span_id": r["parent16"]}]
+    )
+    return {
+        "res_idx": 0,
+        "trace_id": r["trace_hex"],
+        "span_id": r["span_hex"],
+        "parent_span_id": r["parent16"],
+        "name": r["name"],
+        "kind": int(r["kind"]),
+        "start_time_unix_nano": start_ns,
+        "end_time_unix_nano": end_ns,
+        "status_code": status,
+        "attrs": {"conv": r["conv_id"]},
+        "events": events,
+        "links": links,
+    }
+
+
+def _bag(rows, drop=("path", "res_idx")):
+    """Order-insensitive multiset of decoded rows, minus positional fields."""
+    import json
+
+    return sorted(
+        json.dumps({k: v for k, v in r.items() if k not in drop}, sort_keys=True)
+        for r in rows
+    )
+
+
+def _files(d):
+    import os
+
+    return sorted(f for f in os.listdir(d) if f.endswith(".pb"))
+
+
+def _check_writer(spark, tmp_path, old_in, new_in, to_record, encode, decode,
+                  write, read, drop=("path", "res_idx")):
+    """write+read of ``new_in`` == decode of the closure form's files over
+    ``old_in``; same file names; one file per non-empty partition; a second
+    write into the same dir clears it and reproduces names and rows."""
+    ref, out = str(tmp_path / "ref"), str(tmp_path / "out")
+    _closure_capture(old_in, ref, to_record, encode)
+    n = write(new_in, out)
+    got = [r.asDict(recursive=True) for r in read(spark, out).collect()]
+    want = []
+    for f in _files(ref):
+        with open(f"{ref}/{f}", "rb") as fh:
+            want.extend(decode(fh.read(), f))
+    assert n == new_in.count() == len(got)
+    assert all(r["res_idx"] >= 0 for r in got)
+    assert _bag(got, drop) == _bag(want, drop)
+    assert _files(out) == _files(ref)
+    sizes = new_in.rdd.mapPartitions(lambda it: [sum(1 for _ in it)]).collect()
+    assert len(_files(out)) == sum(1 for s in sizes if s) < len(sizes)
+
+    (tmp_path / "out" / "part-99999.pb").write_bytes(b"stale")
+    assert write(new_in, out) == n
+    assert _files(out) == _files(ref)
+    again = [r.asDict(recursive=True) for r in read(spark, out).collect()]
+    assert _bag(again, ()) == _bag(got, ())
+    return got
+
+
+def test_write_pb_logs_matches_closure_form(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry
+    from otel_arrow_adapter_spark.sources import (
+        decode_export_logs_request,
+        encode_export_logs_request,
+        read_pb_logs,
+        write_pb_logs,
+    )
+
+    parsed = spark.createDataFrame(
+        [
+            ("log", "conv-1", 1_700_000_000_000_000, 9, "INFO", "hello", "grep"),
+            ("log", "conv-2", None, None, "WARN", None, None),
+            ("log", "conv-3", 1_700_000_000_000_001, 17, "ERROR", "boom", None),
+            ("log", "conv-4", 5, 13, None, "", "ls"),
+            ("metric", "conv-5", 7, 9, "INFO", "not a log", None),
+        ],
+        "signal_type string, conv_id string, log_ts_us long, "
+        "severity_number int, severity_text string, msg string, tool string",
+    ).repartition(6, "conv_id")
+    old_in = parsed.where(F.col("signal_type") == "log").select(
+        "severity_text",
+        "severity_number",
+        F.col("msg").alias("body"),
+        (F.col("log_ts_us") * 1000).alias("time_unix_nano"),
+    )
+    got = _check_writer(
+        spark, tmp_path, old_in, entry._capture_logs(parsed), _old_log_record,
+        encode_export_logs_request, decode_export_logs_request,
+        write_pb_logs, read_pb_logs, drop=("path", "res_idx", "attrs", "n_attrs"),
+    )
+    # the tool attribute is the one field the closure form did not carry;
+    # a null tool is a null map and decodes as no attributes
+    assert sorted((r["body"] or "", r["n_attrs"], r["attrs"]) for r in got) == [
+        ("", 0, {}), ("", 1, {"tool": "ls"}), ("boom", 0, {}),
+        ("hello", 1, {"tool": "grep"}),
+    ]
+
+
+def test_write_pb_metrics_matches_closure_form(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry
+    from otel_arrow_adapter_spark.operators.metrics_dp import exp_histogram_rollup
+    from otel_arrow_adapter_spark.sources import (
+        decode_export_metrics_request,
+        encode_export_metrics_request,
+        read_pb_metrics,
+        write_pb_metrics,
+    )
+
+    pts = spark.createDataFrame(
+        [
+            ("lat", "ms", 1500), ("lat", "ms", 700), ("lat", "ms", 1000),
+            ("q", None, 3000), ("q", None, 5), ("up", "1", 1001),
+        ],
+        "metric_name string, metric_unit string, metric_value long",
+    )
+    old_in = exp_histogram_rollup(
+        pts.withColumn("value_delta", F.col("metric_value") - F.lit(1000)),
+        max_buckets=18, value_col="value_delta",
+    ).select(
+        "metric_name", "metric_unit", "count", "sum", "scale", "zero_count",
+        "positive_offset",
+        F.array_join("positive_bucket_counts", ",").alias("pos_csv"),
+        "negative_offset",
+        F.array_join("negative_bucket_counts", ",").alias("neg_csv"),
+    ).repartition(6, "metric_name")
+    new_in = entry._capture_exp_hists(pts).repartition(6, "metric_name")
+    got = _check_writer(
+        spark, tmp_path, old_in, new_in, _old_exp_hist_record,
+        encode_export_metrics_request, decode_export_metrics_request,
+        write_pb_metrics, read_pb_metrics,
+    )
+    assert {r["metric_name"]: r["attrs"] for r in got} == {
+        "lat": {"unit": "ms"}, "q": {"unit": ""}, "up": {"unit": "1"},
+    }
+    assert {r["metric_name"]: r["negative_bucket_counts"] for r in got}["lat"] == "1"
+
+
+def test_write_pb_spans_matches_closure_form(spark, tmp_path):
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry
+    from otel_arrow_adapter_spark.sources import (
+        decode_export_trace_request,
+        encode_export_trace_request,
+        read_pb_spans,
+        write_pb_spans,
+    )
+
+    t0 = dt.datetime(2024, 1, 2, 3, 4, 5, 678901)
+    tp = spark.createDataFrame(
+        [
+            ("conv-1", "00000000000000a1", None, 0, t0, 120),
+            ("conv-1", "00000000000000a2", "a1", 1, t0 + dt.timedelta(seconds=1), None),
+            ("conv-2", "00000000000000b1", "b0", 2, t0 + dt.timedelta(minutes=5), 7),
+            ("conv-3", "00000000000000c1", None, 3, t0 + dt.timedelta(hours=1), None),
+        ],
+        "conv_id string, span_hex string, parent_hex string, turn_idx int, "
+        "ts timestamp_ntz, dur_ms long",
+    ).repartition(6, "conv_id")
+    old_in = tp.select(
+        "conv_id",
+        F.md5(F.col("conv_id")).alias("trace_hex"),
+        F.col("span_hex"),
+        F.when(
+            F.col("parent_hex").isNotNull(), F.lpad("parent_hex", 16, "0")
+        ).alias("parent16"),
+        F.concat(F.lit("op-"), F.col("conv_id")).alias("name"),
+        (F.col("turn_idx") % 4 + 1).cast("int").alias("kind"),
+        (F.unix_micros(F.col("ts").cast("timestamp")) * 1000).alias("start_ns"),
+        F.col("dur_ms").cast("long").alias("dur_ms"),
+    )
+    got = _check_writer(
+        spark, tmp_path, old_in, entry._capture_spans(tp), _old_span_record,
+        encode_export_trace_request, decode_export_trace_request,
+        write_pb_spans, read_pb_spans,
+    )
+    by_span = {r["span_id"]: r for r in got}
+    assert [e["name"] for e in by_span["00000000000000a1"]["events"]] == [
+        "span.start", "span.end"
+    ]
+    assert by_span["00000000000000a1"]["links"] == []
+    assert by_span["00000000000000a2"]["end_time_unix_nano"] is None
+    assert by_span["00000000000000a2"]["status_code"] is None
+    assert by_span["00000000000000a2"]["links"][0]["span_id"] == "00000000000000a1"
+
+
+# ---------------------------------------------------------------------------
+# Oracle gate for the six capture round trips (.pb and protojson, per signal)
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def duck():
+    import duckdb
+
+    from conftest import SF_DIR
+    from tools.oracle_check import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+        )
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", [
+    "pipeline_pb_capture_roundtrip",
+    "pipeline_otlp_json_roundtrip",
+    "pipeline_pb_metrics_roundtrip",
+    "pipeline_otlp_json_metrics_roundtrip",
+    "pipeline_pb_traces_roundtrip",
+    "pipeline_otlp_json_traces_roundtrip",
+])
+def test_capture_roundtrip_matches_oracle(spark, duck, name):
+    """Row count, column names and the order-insensitive value hash agree
+    with the DuckDB oracle, the same comparison tools/oracle_check.py runs."""
+    import __spark_entry__ as entry
+    from conftest import SF_DIR
+    from tools.oracle_check import norm_rows
+
+    sdf = entry.queries()[name](spark, SF_DIR)
+    srows = [tuple(r) for r in sdf.collect()]
+    res = duck.execute(entry.oracle_sql()[name])
+    dcols = [d[0] for d in res.description]
+    drows = res.fetchall()
+    assert srows
+    assert sorted(sdf.columns) == sorted(dcols)
+    assert len(srows) == len(drows)
+    assert norm_rows(sdf.columns, srows) == norm_rows(dcols, drows)

@@ -52,6 +52,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 OUT_DIR = os.environ.get("OAAS_AUDIT_10X_DIR", "/tmp/oaas_audit_10x")
 REPLICAS = 10
+# written after build_10x's last artifact: an interrupted build leaves no
+# sentinel, so the next run rebuilds instead of reusing partial replicas
+BUILT = os.path.join(OUT_DIR, "_BUILT")
 
 _VOWELS = "aeiou"
 _ROTS = ["aeiou", "eioua", "iouae", "ouaei", "uaeio",
@@ -115,6 +118,7 @@ def build_10x(spark: SparkSession) -> None:
         dst = os.path.join(OUT_DIR, f)
         if not os.path.exists(dst):
             os.symlink(os.path.join(SF_DIR, f), dst)
+    open(BUILT, "w").close()
 
 
 def time_query(spark: SparkSession, fn, sf_dir: str, repeats: int = 2) -> float:
@@ -136,7 +140,7 @@ def main() -> None:
 
     only = sys.argv[1].split(",") if len(sys.argv) > 1 else None
     spark = get_spark(app_name="oaas-audit-10x", cores=CPUS, shuffle_partitions=CPUS)
-    if not os.path.exists(f"{OUT_DIR}/events.parquet"):
+    if not os.path.exists(BUILT):
         build_10x(spark)
     rows = {}
     for name, fn in entrymod.queries().items():
