@@ -17,17 +17,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+# null tool -> null; a tool the catalog lacks -> false
+_TOOL_KNOWN = "CASE WHEN tool IS NULL THEN CAST(NULL AS BOOLEAN) ELSE coalesce(tool_known, false) END"
+
+
 def enrich_with_catalog(df: DataFrame, catalog: DataFrame) -> DataFrame:
     """Left-join catalog on ``tool``; adds service_name, resource_attrs,
     tool_known (false = tool present but not in catalog)."""
-    cat = catalog.withColumn("tool_known", F.lit(True))
+    cat = catalog.selectExpr("*", "true AS tool_known")
     out = df.join(F.broadcast(cat), on="tool", how="left")
-    return out.withColumn(
-        "tool_known",
-        F.when(F.col("tool").isNull(), F.lit(None).cast("boolean")).otherwise(
-            F.coalesce(F.col("tool_known"), F.lit(False))
-        ),
-    )
+    return out.withColumn("tool_known", F.expr(_TOOL_KNOWN))
 
 
 def enrich_asof(

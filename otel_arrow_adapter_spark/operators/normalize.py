@@ -48,6 +48,11 @@ def ranked_dim(
     )
 
 
+def _xxhash_sql(cols: tuple[str, ...]) -> str:
+    """Content hash of ``cols``, a null value hashing like ''."""
+    return "xxhash64(" + ", ".join(f"coalesce(`{c}`, '')" for c in cols) + ")"
+
+
 def assign_surrogate_ids(
     df: DataFrame,
     resource_cols: tuple[str, ...] = ("tool",),
@@ -56,10 +61,8 @@ def assign_surrogate_ids(
 ) -> DataFrame:
     """Add res_id / scope_id surrogate key columns."""
     if mode == "hash":
-        return df.withColumn(
-            "res_id", F.xxhash64(*[F.coalesce(F.col(c), F.lit("")) for c in resource_cols])
-        ).withColumn(
-            "scope_id", F.xxhash64(*[F.coalesce(F.col(c), F.lit("")) for c in scope_cols])
+        return df.selectExpr(
+            "*", f"{_xxhash_sql(resource_cols)} AS res_id", f"{_xxhash_sql(scope_cols)} AS scope_id"
         )
 
     out = df

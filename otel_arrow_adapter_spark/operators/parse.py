@@ -22,6 +22,18 @@ Classification stays on anchored rlike so malformed shapes quarantine
 exactly like the DuckDB oracles. All casts/lookups are try_* forms: Spark 4
 runs ANSI mode, and a malformed value must quarantine, never raise
 (error-not-crash, /root/reference/pkg/otel/logs/otlp/logs.go:145-154).
+
+The expressions are SQL text, handed to ``selectExpr`` (or one ``F.expr``
+per Column-returning helper): the JVM parses a whole projection in one
+call, where the Column API pays a py4j round trip per expression node
+(most ``F.*`` builders ~10 more, to record their Python call site). Built
+with the Column API, ``parse_turns`` sent 1,498 py4j commands and took
+~210 ms of driver time; as two ``selectExpr`` calls it sends 38 and takes
+~60 ms (4-core host, 90k-turn input). Regex and grammar constants are embedded as SQL string literals,
+so ``_sql_lit`` refuses (checked at import) any that holds a quote or a
+backslash: the SQL parser would end the literal there or unescape it into
+a different pattern.
+
 A pandas-UDF grok fallback lives in functions/grok.py for grammars that
 need real Python.
 
@@ -54,6 +66,12 @@ RE_TRACE_SPAN = r"^span=([0-9a-f]{16})"
 RE_TRACE_PARENT = r" parent=([0-9a-f]{8})"
 RE_TRACE_DUR = r" dur_ms=([0-9]+)"
 
+# Signal classification by grammar shape (anchored); parse_arrow applies the
+# same three patterns, so both implementations quarantine identically.
+CLASSIFY_LOG = r"^ts_us=[0-9]+ level="
+CLASSIFY_METRIC = r"^name=[a-z_]+ value="
+CLASSIFY_TRACE = r"^span=[0-9a-f]{16} parent="
+
 # OTLP severity numbers (public OTel spec).
 SEVERITY_NUMBER = {"TRACE": 1, "DEBUG": 5, "INFO": 9, "WARN": 13, "ERROR": 17, "FATAL": 21}
 
@@ -70,60 +88,6 @@ BODY_ARMS = {"str": "string", "int": "long", "double": "double",
              "bool": "boolean", "bytes": "binary", "ser": "string"}
 BODY_TAG = {"str": BODY_STR, "int": BODY_INT, "double": BODY_DOUBLE,
             "bool": BODY_BOOL, "bytes": BODY_BYTES, "ser": BODY_SER}
-
-
-def make_body(value: Column, kind: str) -> Column:
-    """Typed body struct with exactly one populated arm."""
-    fields = [F.lit(BODY_TAG[kind]).cast("tinyint").alias("body_type")]
-    for arm, t in BODY_ARMS.items():
-        v = value.cast(t) if arm == kind else F.lit(None).cast(t)
-        fields.append(v.alias(arm))
-    return F.struct(*fields)
-
-
-def body_value(body: Column, kind: str) -> Column:
-    """Decode mirror (logs.go:165-228 dispatch): the arm named by the tag,
-    null when the tag doesn't match ``kind``."""
-    return F.when(body["body_type"] == BODY_TAG[kind], body[kind])
-
-
-def _x(col: Column, pattern: str) -> Column:
-    """regexp_extract with '' -> null (P6 non-default suppression)."""
-    return F.nullif(F.regexp_extract(col, pattern, 1), F.lit(""))
-
-
-def classify_signal(text: Column) -> Column:
-    """R1 analog: payload-type dispatch by grammar shape.
-
-    Reference dispatches decoded payloads by a type enum
-    (/root/reference/pkg/otel/metrics/otlp/related_data.go:101-156); our
-    payloads are text lines, so the type is recovered from the grammar.
-    """
-    return (
-        F.when(text.rlike(r"^ts_us=[0-9]+ level="), F.lit("log"))
-        .when(text.rlike(r"^name=[a-z_]+ value="), F.lit("metric"))
-        .when(text.rlike(r"^span=[0-9a-f]{16} parent="), F.lit("trace"))
-        .otherwise(F.lit("quarantine"))
-    )
-
-
-# One-pass tokenizer: strip the quoted msg, split on spaces, key/value per
-# token. Tokens without '=' get a null value; empty values ('code=') null out
-# via nullif (P6 non-default suppression).
-_TOKENIZE = """
-transform(split(regexp_replace(text, ' msg="[^"]*"', ''), ' '),
-          s -> struct(substring_index(s, '=', 1) AS k,
-                      CASE WHEN instr(s, '=') > 0
-                           THEN nullif(substring(s, instr(s, '=') + 1), '')
-                      END AS v))
-"""
-
-
-def _field(kv: Column, key: str) -> Column:
-    """First value for ``key`` in the token array; null when absent.
-    try_element_at: ANSI-safe on the empty filter result."""
-    return F.try_element_at(F.filter(kv, lambda p: p["k"] == key), F.lit(1))["v"]
-
 
 # Per-field VALUE grammars — the capture bodies of the oracle regexes above.
 # Gating token values through these (as prefix extraction) makes the
@@ -143,11 +107,137 @@ FIELD_VALUE_GRAMMAR = {
 }
 
 
-def _vfield(kv: Column, key: str) -> Column:
-    """``_field`` gated through the field's value grammar (prefix match)."""
-    return F.nullif(
-        F.regexp_extract(_field(kv, key), f"^({FIELD_VALUE_GRAMMAR[key]})", 1), F.lit("")
+def _sql_lit(pattern: str) -> str:
+    """``pattern`` as a SQL string literal. Spark's parser ends a literal at
+    a quote and unescapes backslashes, so a pattern holding either would be
+    silently read as a different regex: refuse it instead."""
+    if "'" in pattern or "\\" in pattern:
+        raise ValueError(f"pattern {pattern!r} cannot be embedded in SQL text verbatim")
+    return f"'{pattern}'"
+
+
+# Checked at import: every regex or grammar constant that reaches SQL text.
+SQL_EMBEDDED_PATTERNS = (
+    RE_LOG_TS, RE_LOG_LEVEL, RE_LOG_MSG, RE_LOG_CODE, RE_LOG_RETRY,
+    RE_METRIC_NAME, RE_METRIC_VALUE, RE_METRIC_UNIT,
+    RE_TRACE_SPAN, RE_TRACE_PARENT, RE_TRACE_DUR,
+    CLASSIFY_LOG, CLASSIFY_METRIC, CLASSIFY_TRACE,
+    *FIELD_VALUE_GRAMMAR.values(),
+)
+for _p in SQL_EMBEDDED_PATTERNS:
+    _sql_lit(_p)
+
+
+def _body_sql(value: str, kind: str) -> str:
+    """SQL text of the typed body struct: ``value`` (SQL) in the ``kind``
+    arm, every other arm a typed null."""
+    arms = ", ".join(
+        f"'{arm}', CAST({value if arm == kind else 'NULL'} AS {t})" for arm, t in BODY_ARMS.items()
     )
+    return f"named_struct('body_type', CAST({BODY_TAG[kind]} AS TINYINT), {arms})"
+
+
+def make_body(value: Column | str, kind: str) -> Column:
+    """Typed body struct with exactly one populated arm. ``value`` is SQL
+    text (e.g. a column name) or a Column."""
+    if isinstance(value, str):
+        return F.expr(_body_sql(value, kind))
+    return F.expr(_body_sql("NULL", kind)).withField(kind, value.cast(BODY_ARMS[kind]))
+
+
+def body_value(body: Column, kind: str) -> Column:
+    """Decode mirror (logs.go:165-228 dispatch): the arm named by the tag,
+    null when the tag doesn't match ``kind``."""
+    return F.when(body["body_type"] == BODY_TAG[kind], body[kind])
+
+
+def _x(col: str, pattern: str) -> str:
+    """regexp_extract with '' -> null (P6 non-default suppression)."""
+    return f"nullif(regexp_extract({col}, {_sql_lit(pattern)}, 1), '')"
+
+
+def _classify_sql(text: str) -> str:
+    """R1 analog: payload-type dispatch by grammar shape, as SQL over the
+    column named ``text``.
+
+    Reference dispatches decoded payloads by a type enum
+    (/root/reference/pkg/otel/metrics/otlp/related_data.go:101-156); our
+    payloads are text lines, so the type is recovered from the grammar.
+    """
+    return (
+        f"CASE WHEN rlike({text}, {_sql_lit(CLASSIFY_LOG)}) THEN 'log' "
+        f"WHEN rlike({text}, {_sql_lit(CLASSIFY_METRIC)}) THEN 'metric' "
+        f"WHEN rlike({text}, {_sql_lit(CLASSIFY_TRACE)}) THEN 'trace' "
+        "ELSE 'quarantine' END"
+    )
+
+
+def classify_signal(text: str = "text") -> Column:
+    """``_classify_sql`` over the column named ``text``, as a Column."""
+    return F.expr(_classify_sql(text))
+
+
+# One-pass tokenizer: strip the quoted msg, split on spaces, key/value per
+# token. Tokens without '=' get a null value; empty values ('code=') null out
+# via nullif (P6 non-default suppression).
+_TOKENIZE = f"""
+transform(split(regexp_replace(text, {_sql_lit(RE_LOG_MSG)}, ''), ' '),
+          s -> struct(substring_index(s, '=', 1) AS k,
+                      CASE WHEN instr(s, '=') > 0
+                           THEN nullif(substring(s, instr(s, '=') + 1), '')
+                      END AS v))
+"""
+
+
+def _field(key: str) -> str:
+    """First value for ``key`` in the token array ``__kv``; null when
+    absent. try_element_at: ANSI-safe on the empty filter result."""
+    return f"try_element_at(filter(__kv, p -> p.k = '{key}'), 1).v"
+
+
+def _vfield(key: str) -> str:
+    """``_field`` gated through the field's value grammar (prefix match)."""
+    return _x(_field(key), f"^({FIELD_VALUE_GRAMMAR[key]})")
+
+
+def _when_sig(sig: str, expr: str) -> str:
+    return f"CASE WHEN signal_type = '{sig}' THEN {expr} END"
+
+
+_SEV_MAP = "map(" + ", ".join(f"'{k}', {v}" for k, v in SEVERITY_NUMBER.items()) + ")"
+_SEV_TEXT = _when_sig("log", _vfield("level"))
+_MSG = _when_sig("log", _x("text", RE_LOG_MSG))
+_RETRY = _when_sig("log", _vfield("retry"))
+
+# Step 1 keeps the input columns and adds the classification and the token
+# array; step 2 reads every typed field from them.
+_CLASSIFIED = (
+    "conv_id", "turn_idx", "role", "tool", "ts", "text",
+    f"{_classify_sql('text')} AS signal_type",
+    f"{_TOKENIZE} AS __kv",
+)
+_PARSED = (
+    "conv_id", "turn_idx", "role", "tool", "ts", "text", "signal_type",
+    # log fields
+    f"try_cast({_when_sig('log', _vfield('ts_us'))} AS BIGINT) AS log_ts_us",
+    f"{_SEV_TEXT} AS severity_text",
+    f"CAST(element_at({_SEV_MAP}, {_SEV_TEXT}) AS INT) AS severity_number",
+    f"{_MSG} AS msg",
+    f"try_cast({_when_sig('log', _vfield('code'))} AS BIGINT) AS code",
+    f"CASE WHEN {_RETRY} = 'true' THEN true WHEN {_RETRY} = 'false' THEN false END AS retry",
+    # metric fields
+    f"{_when_sig('metric', _vfield('name'))} AS metric_name",
+    f"try_cast({_when_sig('metric', _vfield('value'))} AS BIGINT) AS metric_value",
+    f"{_when_sig('metric', _vfield('unit'))} AS metric_unit",
+    # trace fields (hex-string ids; binary form is unhex(span_hex) — the
+    # 16-char id is 8 bytes, validated like logs.go:145-154)
+    f"{_when_sig('trace', _vfield('span'))} AS span_hex",
+    f"{_when_sig('trace', _vfield('parent'))} AS parent_hex",
+    f"try_cast({_when_sig('trace', _vfield('dur_ms'))} AS BIGINT) AS dur_ms",
+    # body union (str-typed for text payloads; full union shape so typed
+    # bodies flow through the same schema)
+    f"{_body_sql(_MSG, 'str')} AS body",
+)
 
 
 def parse_turns(df: DataFrame) -> DataFrame:
@@ -161,52 +251,4 @@ def parse_turns(df: DataFrame) -> DataFrame:
     type, cf. the per-payload builders in
     /root/reference/pkg/otel/logs/arrow/logs.go:38-62).
     """
-    t = F.col("text")
-    sig = F.col("signal_type")
-    kv = F.col("__kv")
-
-    def when_sig(s: str, col: Column) -> Column:
-        return F.when(sig == s, col)
-
-    sev_text = when_sig("log", _vfield(kv, "level"))
-    sev_num = F.element_at(
-        F.create_map(*[y for k, v in SEVERITY_NUMBER.items() for y in (F.lit(k), F.lit(v))]),
-        sev_text,
-    )
-    msg = when_sig("log", _x(t, RE_LOG_MSG))
-    retry_v = when_sig("log", _vfield(kv, "retry"))
-
-    return (
-        df.withColumn("signal_type", classify_signal(t))
-        .withColumn("__kv", F.expr(_TOKENIZE))
-        .select(
-            "conv_id",
-            "turn_idx",
-            "role",
-            "tool",
-            "ts",
-            "text",
-            "signal_type",
-            # log fields
-            when_sig("log", _vfield(kv, "ts_us")).try_cast("long").alias("log_ts_us"),
-            sev_text.alias("severity_text"),
-            sev_num.cast("int").alias("severity_number"),
-            msg.alias("msg"),
-            when_sig("log", _vfield(kv, "code")).try_cast("long").alias("code"),
-            F.when(retry_v == "true", F.lit(True))
-            .when(retry_v == "false", F.lit(False))
-            .alias("retry"),
-            # metric fields
-            when_sig("metric", _vfield(kv, "name")).alias("metric_name"),
-            when_sig("metric", _vfield(kv, "value")).try_cast("long").alias("metric_value"),
-            when_sig("metric", _vfield(kv, "unit")).alias("metric_unit"),
-            # trace fields (hex-string ids; binary form is unhex(span_hex) — the
-            # 16-char id is 8 bytes, validated like logs.go:145-154)
-            when_sig("trace", _vfield(kv, "span")).alias("span_hex"),
-            when_sig("trace", _vfield(kv, "parent")).alias("parent_hex"),
-            when_sig("trace", _vfield(kv, "dur_ms")).try_cast("long").alias("dur_ms"),
-            # body union (str-typed for text payloads; full union shape so
-            # typed bodies flow through the same schema)
-            make_body(msg, "str").alias("body"),
-        )
-    )
+    return df.selectExpr(*_CLASSIFIED).selectExpr(*_PARSED)

@@ -32,13 +32,9 @@ import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 
-from .parse import BODY_STR, SEVERITY_NUMBER
-
-# Classification patterns — EXACTLY the three anchored rlikes in
-# parse.classify_signal, so both implementations quarantine identically.
-CLASSIFY_LOG = r"^ts_us=[0-9]+ level="
-CLASSIFY_METRIC = r"^name=[a-z_]+ value="
-CLASSIFY_TRACE = r"^span=[0-9a-f]{16} parent="
+# Classification patterns: the same three anchored patterns parse.py
+# classifies with, so both implementations quarantine identically.
+from .parse import BODY_STR, CLASSIFY_LOG, CLASSIFY_METRIC, CLASSIFY_TRACE, SEVERITY_NUMBER
 
 # Per-field extraction patterns: the ORACLE regexes (parse.RE_*) verbatim,
 # one named group each, applied INDEPENDENTLY. A sequential

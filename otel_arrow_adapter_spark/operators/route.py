@@ -24,12 +24,21 @@ sort-for-compression optimizer (SURVEY.md §2.4):
 Every routed row keeps verbatim ``text`` + (conv_id, turn_idx): round-trip
 (per-turn text equality, routed-row set equality) is checked against the
 union of sinks.
+
+The label, text-suppression, sort-key and rebuild expressions are SQL text
+(``selectExpr`` or one ``F.expr`` per helper), for the reason given in
+parse.py: the JVM parses a projection in one call, where the Column API
+pays a py4j round trip per expression node, and most ``F.*`` builders
+another ~10 to record their Python call site. ``write_routed`` returns the
+schema it wrote, so the pipeline reads its own output back without a
+schema-inference job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 SINKS = ("logs", "metrics", "traces", "quarantine")
 
@@ -129,56 +138,49 @@ def sink_sort_exprs(df: DataFrame, strategy: dict[str, list[str]]) -> list[Colum
     types = dict(df.dtypes)
     _NUM = ("tinyint", "smallint", "int", "bigint")
 
-    exprs: list[Column] = [F.col("sink")]
+    exprs = ["sink"]
     for i in range(max(len(v) for v in strategy.values())):
         at_i = {s: keys[i] for s, keys in strategy.items() if i < len(keys)}
         names = set(at_i.values())
         if len(names) == 1:
-            exprs.append(F.col(names.pop()))
+            exprs.append(f"`{names.pop()}`")
             continue
         arm_types = {types.get(n, "string") for n in names}
         if len(arm_types) == 1:
-            cast_to = arm_types.pop()
-            conv = lambda n: F.col(n)  # noqa: E731 — same type, no cast
+            conv = lambda n: f"`{n}`"  # noqa: E731 — same type, no cast
         elif arm_types <= set(_NUM):
-            conv = lambda n: F.col(n).cast("bigint")  # noqa: E731
+            conv = lambda n: f"CAST(`{n}` AS BIGINT)"  # noqa: E731
         else:
             def conv(n):  # mixed types: order-preserving string form
-                c = F.col(n).cast("string")
-                return F.lpad(c, 20, "0") if types.get(n) in _NUM else c
-        e = None
-        for sink, key in at_i.items():
-            cond = F.col("sink") == sink
-            e = F.when(cond, conv(key)) if e is None else e.when(cond, conv(key))
-        exprs.append(e)
-    return exprs
+                c = f"CAST(`{n}` AS STRING)"
+                return f"lpad({c}, 20, '0')" if types.get(n) in _NUM else c
+        arms = " ".join(f"WHEN sink = '{sink}' THEN {conv(key)}" for sink, key in at_i.items())
+        exprs.append(f"CASE {arms} END")
+    return [F.expr(e) for e in exprs]
+
+
+# A row quarantines when its text is unparseable or its tool is present but
+# unknown to the catalog (tool_known=false from enrich); rows with no tool
+# stay in their signal sink.
+_QUARANTINED = "signal_type = 'quarantine' OR coalesce(tool_known = false, false)"
+_SINK = f"CASE WHEN {_QUARANTINED} THEN 'quarantine' ELSE concat(signal_type, 's') END"
+_ERROR = (
+    "CASE WHEN signal_type = 'quarantine' THEN 'unparseable_text' "
+    "WHEN coalesce(tool_known = false, false) THEN 'unknown_tool' END"
+)
 
 
 def sink_label() -> Column:
-    """Row -> sink name. Unknown-but-present tools (tool_known=false from
-    enrich) quarantine; rows with no tool stay in their signal sink."""
-    return F.when(
-        (F.col("signal_type") == "quarantine")
-        | F.coalesce(F.col("tool_known") == False, F.lit(False)),  # noqa: E712
-        F.lit("quarantine"),
-    ).otherwise(F.concat(F.col("signal_type"), F.lit("s")))
+    """Row -> sink name."""
+    return F.expr(_SINK)
 
 
 def label_sinks(parsed: DataFrame) -> DataFrame:
     """Add ``sink`` + ``error`` columns (single projection, no branch)."""
     df = parsed
     if "tool_known" not in df.columns:
-        df = df.withColumn("tool_known", F.lit(None).cast("boolean"))
-    df = df.withColumn("sink", sink_label())
-    return df.withColumn(
-        "error",
-        F.when(
-            F.col("sink") == "quarantine",
-            F.when(F.col("signal_type") == "quarantine", F.lit("unparseable_text")).otherwise(
-                F.lit("unknown_tool")
-            ),
-        ),
-    )
+        df = df.selectExpr("*", "CAST(NULL AS BOOLEAN) AS tool_known")
+    return df.selectExpr("*", f"{_SINK} AS sink", f"{_ERROR} AS error")
 
 
 def _trace_ids(df: DataFrame) -> DataFrame:
@@ -210,46 +212,25 @@ def route_signals(parsed: DataFrame) -> dict[str, DataFrame]:
 _DERIVED = ("body", "signal_type", "tool_known", "resource_attrs", "span_id", "parent_span_id")
 
 
+# The verbatim payload regenerated from the typed columns — the
+# reference's decode model (structured record -> payload, not a stored
+# copy). Null whenever any required field is null (concat null-propagates),
+# so out-of-grammar rows fall back to the stored raw text. Optional fields
+# re-appear iff their column is non-null (P6: absent <=> null).
+_REBUILD_TEXT = """CASE
+  WHEN sink = 'logs' THEN concat('ts_us=', CAST(log_ts_us AS STRING),
+    ' level=', severity_text, ' msg="', msg, '"', ' code=', CAST(code AS STRING),
+    coalesce(concat(' retry=', CAST(retry AS STRING)), ''))
+  WHEN sink = 'metrics' THEN concat('name=', metric_name,
+    ' value=', CAST(metric_value AS STRING), coalesce(concat(' unit=', metric_unit), ''))
+  WHEN sink = 'traces' THEN concat('span=', span_hex, ' parent=', parent_hex,
+    ' dur_ms=', CAST(dur_ms AS STRING))
+END"""
+
+
 def rebuild_text() -> Column:
-    """Regenerate the verbatim payload from the typed columns — the
-    reference's decode model (structured record -> payload, not a stored
-    copy). Null whenever any required field is null (concat
-    null-propagates), so out-of-grammar rows fall back to the stored raw
-    text. Optional fields re-appear iff their column is non-null (P6:
-    absent ⇔ null)."""
-    sink = F.col("sink")
-    log = F.concat(
-        F.lit("ts_us="),
-        F.col("log_ts_us").cast("string"),
-        F.lit(" level="),
-        F.col("severity_text"),
-        F.lit(' msg="'),
-        F.col("msg"),
-        F.lit('"'),
-        F.lit(" code="),
-        F.col("code").cast("string"),
-        F.coalesce(F.concat(F.lit(" retry="), F.col("retry").cast("string")), F.lit("")),
-    )
-    metric = F.concat(
-        F.lit("name="),
-        F.col("metric_name"),
-        F.lit(" value="),
-        F.col("metric_value").cast("string"),
-        F.coalesce(F.concat(F.lit(" unit="), F.col("metric_unit")), F.lit("")),
-    )
-    trace = F.concat(
-        F.lit("span="),
-        F.col("span_hex"),
-        F.lit(" parent="),
-        F.col("parent_hex"),
-        F.lit(" dur_ms="),
-        F.col("dur_ms").cast("string"),
-    )
-    return (
-        F.when(sink == "logs", log)
-        .when(sink == "metrics", metric)
-        .when(sink == "traces", trace)
-    )
+    """``_REBUILD_TEXT`` as a Column."""
+    return F.expr(_REBUILD_TEXT)
 
 
 def suppress_rebuildable_text(df: DataFrame) -> DataFrame:
@@ -259,14 +240,12 @@ def suppress_rebuildable_text(df: DataFrame) -> DataFrame:
     routed table stops paying for a verbatim copy of every payload while
     the per-turn text-equality contract stays exact for ANY input (the
     write-time comparison is the guard, not a grammar assumption)."""
-    return df.withColumn(
-        "text", F.when(~rebuild_text().eqNullSafe(F.col("text")), F.col("text"))
-    )
+    return df.withColumn("text", F.expr(f"CASE WHEN NOT (({_REBUILD_TEXT}) <=> text) THEN text END"))
 
 
 def restore_text(df: DataFrame) -> DataFrame:
     """Read-side inverse: stored raw text wins, else regenerate."""
-    return df.withColumn("text", F.coalesce(F.col("text"), rebuild_text()))
+    return df.withColumn("text", F.expr(f"coalesce(text, {_REBUILD_TEXT})"))
 
 
 def write_routed(
@@ -279,7 +258,7 @@ def write_routed(
     suppress_text: bool = False,
     codec: str = "zstd",
     bloom_cols: dict[str, int] | None = None,
-) -> None:
+) -> StructType:
     """One sorted dynamic-partition write for all sinks (S3 analog:
     IPC+ZSTD+dict-deltas -> Parquet dictionary pages + zstd). Each sink
     gets its own sort keys (``SORT_STRATEGIES[sort_strategy]``) inside the
@@ -313,13 +292,15 @@ def write_routed(
     dictionary-encoded (the dictionary already answers membership
     exactly — measured: no bytes added at test SF's 15 convs/file), so
     the option only costs bytes once per-file cardinality defeats the
-    dictionary — exactly when point lookups need it."""
+    dictionary — exactly when point lookups need it.
+
+    Returns the schema of the table as written: the file columns, then the
+    partition columns in directory order (with the types this frame gave
+    them). Reading back with it skips Parquet's schema-inference job."""
     slim = labeled.drop(*[c for c in _DERIVED if c in labeled.columns])
     if suppress_text:
         slim = suppress_rebuildable_text(slim)
-    sort_cols = [F.col(c) for c in extra_partition_cols] + sink_sort_exprs(
-        slim, SORT_STRATEGIES[sort_strategy]
-    )
+    sort_cols = [*extra_partition_cols, *sink_sort_exprs(slim, SORT_STRATEGIES[sort_strategy])]
     writer = (
         slim.sortWithinPartitions(*sort_cols)
         .write.mode(mode)
@@ -341,10 +322,10 @@ def write_routed(
                 f"schema {sorted(slim.columns)} — no bloom filter written",
                 stacklevel=2,
             )
-    (
-        writer.partitionBy(*extra_partition_cols, "sink")
-        .parquet(f"{out_dir}/{subdir}")
-    )
+    parts = (*extra_partition_cols, "sink")
+    writer.partitionBy(*parts).parquet(f"{out_dir}/{subdir}")
+    schema = slim.schema
+    return StructType([f for f in schema if f.name not in parts] + [schema[c] for c in parts])
 
 
 _HEX = "0123456789abcdef"
@@ -383,7 +364,7 @@ def read_sinks(spark: SparkSession, out_dir: str, subdir: str = "routed") -> dic
     from .parse import make_body
 
     routed = restore_text(spark.read.parquet(f"{out_dir}/{subdir}"))
-    routed = routed.withColumn("body", make_body(F.col("msg"), "str"))
+    routed = routed.withColumn("body", make_body("msg", "str"))
     routed = _trace_ids(routed)
     cols = set(routed.columns)
     enrich_cols = [c for c in ("service_name", "resource_attrs") if c in cols]

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.parse import parse_turns
 from ..operators.parse_arrow import parse_turns_arrow
@@ -58,14 +59,19 @@ def build_labeled(
     return label_sinks(parsed)
 
 
+_COUNTS = (
+    "count(1) AS n_rows",
+    "count(DISTINCT conv_id) AS n_convs",
+    "min(ts) AS min_ts",
+    "max(ts) AS max_ts",
+)
+
+
 def counts_from_routed(routed: DataFrame, run_id: str) -> DataFrame:
     """A4: per-sink aggregates in one groupBy (single scan of the output)."""
     return routed.groupBy("sink").agg(
         F.lit(run_id).alias("run_id"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("conv_id").alias("n_convs"),
-        F.min("ts").alias("min_ts"),
-        F.max("ts").alias("max_ts"),
+        *[F.expr(e) for e in _COUNTS],
     )
 
 
@@ -90,11 +96,8 @@ def run_pipeline(
     pipeline default wins on bytes and ties on throughput."""
     if n_buckets <= 0:
         labeled = build_labeled(transcripts, catalog, id_mode, salt_buckets, parse_impl)
-        write_routed(labeled, out_dir, suppress_text=suppress_text)
-        routed = spark.read.parquet(f"{out_dir}/routed")
-        counts = counts_from_routed(routed, run_id)
-        counts.write.mode("overwrite").parquet(f"{out_dir}/sink_counts")
-        return spark.read.parquet(f"{out_dir}/sink_counts")
+        schema = write_routed(labeled, out_dir, suppress_text=suppress_text)
+        return _write_counts(spark, out_dir, schema, run_id)
 
     # Resumable mode: ONE pass over the input for ALL remaining buckets.
     # (A per-bucket loop re-scans the source n_buckets times — at 100 TB
@@ -107,6 +110,7 @@ def run_pipeline(
     done = ledger.done_keys() if resume else set()
     todo = [b for b in range(n_buckets) if f"bucket={b}" not in done]
     bucket = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
+    schema = None
     if todo:
         for b in todo:
             ledger.record(f"bucket={b}", "started")
@@ -115,13 +119,13 @@ def run_pipeline(
         )
         labeled = build_labeled(part, catalog, id_mode, salt_buckets, parse_impl)
         labeled = labeled.withColumn("bucket", bucket)
-        write_routed(
+        schema = write_routed(
             labeled, out_dir, extra_partition_cols=("bucket",), suppress_text=suppress_text
         )
         # ledger metrics from ONE scan of the (columnar, pruned) output —
         # the ProducerStats analog (stats.go:26-43), per (bucket, sink)
         stats = (
-            spark.read.parquet(f"{out_dir}/routed")
+            spark.read.schema(schema).parquet(f"{out_dir}/routed")
             .where(F.col("bucket").isin([int(b) for b in todo]))
             .groupBy("bucket", "sink")
             .count()
@@ -141,11 +145,20 @@ def run_pipeline(
         for r in stats:
             pstats.inc(f"{r['sink']}_batches_produced")
         pstats.flush_to_ledger(ledger)
+    return _write_counts(spark, out_dir, schema, run_id)
 
-    routed = spark.read.parquet(f"{out_dir}/routed")
-    counts = counts_from_routed(routed, run_id)
+
+def _write_counts(
+    spark: SparkSession, out_dir: str, routed_schema: StructType | None, run_id: str
+) -> DataFrame:
+    """Write ``sink_counts`` from one scan of the routed table and read it
+    back. Both reads take their schema from what was just written (the
+    routed one when this run wrote it), so neither pays Parquet's
+    schema-inference job."""
+    reader = spark.read if routed_schema is None else spark.read.schema(routed_schema)
+    counts = counts_from_routed(reader.parquet(f"{out_dir}/routed"), run_id)
     counts.write.mode("overwrite").parquet(f"{out_dir}/sink_counts")
-    return spark.read.parquet(f"{out_dir}/sink_counts")
+    return spark.read.schema(counts.schema).parquet(f"{out_dir}/sink_counts")
 
 
 def pipeline_sinks(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:

@@ -12,6 +12,7 @@ setting here is chosen to also be correct at cluster scale:
   maxRecordsPerBatch plays the role of the reference's batch unit
   (/root/reference/pkg/otel/arrow_record/producer.go:328-422 per-batch IPC).
 - UTC session timezone for DuckDB-oracle parity.
+- driver heap: $SPARK_DRIVER_MEM, else sized from the host's memory.
 """
 
 from __future__ import annotations
@@ -19,6 +20,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _host_driver_mem() -> str:
+    """Half the host's physical memory (MemTotal on Linux), kept between
+    1 GiB and 24 GiB: local mode runs the whole engine in the driver JVM,
+    and the other half is left to Python workers and the OS."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "24g"
+    return f"{min(24 << 10, max(1 << 10, total >> 21))}m"
 
 
 def get_spark(
@@ -48,7 +60,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _host_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )

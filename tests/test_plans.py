@@ -332,3 +332,67 @@ def test_incremental_dedup_no_cartesian(spark, dedup_materialized):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     out.unpersist()
+
+
+# about 1.3x the 129 commands measured for build_labeled + write_routed
+BUILD_WRITE_PY4J_BUDGET = 170
+
+
+def _py4j_commands(fn) -> int:
+    """py4j commands ``fn()`` sends from this thread. Object deletions go
+    out on py4j's own finalizer thread and are not counted."""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    me, n, real = threading.get_ident(), [0], GatewayClient.send_command
+
+    def counting(self, *a, **k):
+        if threading.get_ident() == me:
+            n[0] += 1
+        return real(self, *a, **k)
+
+    GatewayClient.send_command = counting
+    try:
+        fn()
+        return n[0]
+    finally:
+        GatewayClient.send_command = real
+
+
+def test_pipeline_write_jobs_and_py4j_budget(spark, transcripts, catalog, tmp_path):
+    """The write path builds its plan from SQL text and reads its own output
+    with the schema it wrote. A single-pass run_pipeline runs exactly 5
+    Spark jobs (catalog broadcast, routed write, the two shuffle stages of
+    the counts aggregation, the sink_counts write): no schema-inference
+    job. Building plus writing the labeled frame stays within a py4j
+    budget that the Column-API form, one round trip per expression node
+    (~1,850 commands for build_labeled alone), would exceed."""
+    from otel_arrow_adapter_spark.operators.route import write_routed
+    from otel_arrow_adapter_spark.plans import build_labeled, run_pipeline
+
+    sc = spark.sparkContext
+    # a parquet input, as the job reads: the job count must not depend on
+    # whether the cached fixture's upstream shuffle is still materialized
+    transcripts.write.parquet(str(tmp_path / "in"))
+    src = spark.read.parquet(str(tmp_path / "in"))
+    out = str(tmp_path / "out")
+
+    def run():
+        return run_pipeline(spark, src, catalog, out, id_mode="hash")
+
+    run()  # warm-up: first-use lookups on the gateway are not the plan's cost
+    group = "test_pipeline_write_jobs"
+    sc.setJobGroup(group, group, interruptOnCancel=False)
+    try:
+        n_run = _py4j_commands(run)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+    assert n_run <= 600, n_run
+
+    def build_and_write():
+        write_routed(build_labeled(src, catalog, id_mode="hash"), out, suppress_text=True)
+
+    n = _py4j_commands(build_and_write)
+    assert n <= BUILD_WRITE_PY4J_BUDGET, n
