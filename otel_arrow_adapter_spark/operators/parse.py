@@ -12,27 +12,41 @@ Reference behavior being re-expressed (not ported):
   /root/reference/pkg/otel/logs/otlp/logs.go:145-154 — malformed rows are
   routed to quarantine instead of raising.
 
-Everything is built-in column expressions (JVM, whole-stage codegen). The
-grammar is ``key=value`` tokens (only ``msg="..."`` may contain spaces), so
-the hot path tokenizes ONCE (split + substring_index) and reads fields from
-the token array — 2 regex passes per row (msg extract + msg strip) instead
-of one regexp_extract scan per field, which measured ~2x end-to-end and cut
-the per-row allocation rate that capped thread scaling at local[32].
+Everything is built-in column expressions (JVM). The grammar is
+``key=value`` tokens (only ``msg="..."`` may contain spaces), so the parse
+tokenizes ONCE (split + substring_index) and reads fields from the token
+array — 2 regex passes per row (msg extract + msg strip) instead of one
+regexp_extract scan per field, which measured ~2x end-to-end and cut the
+per-row allocation rate that capped thread scaling at local[32].
 Classification stays on anchored rlike so malformed shapes quarantine
 exactly like the DuckDB oracles. All casts/lookups are try_* forms: Spark 4
 runs ANSI mode, and a malformed value must quarantine, never raise
 (error-not-crash, /root/reference/pkg/otel/logs/otlp/logs.go:145-154).
 
+Canonical fast path: the tokenizer's ``transform``/``filter`` lambdas are
+higher-order functions, which Spark evaluates interpreted
+(``CodegenFallback``), so both projections that use them fall out of
+whole-stage codegen. A JFR profile of a warm noop parse put 52% of the
+executor samples (1,303 of 2,487) in ``SimpleHigherOrderFunction.eval``,
+and 33% (517 of 1,555) across a whole pipeline write. A CANONICAL line —
+every field once, in grammar order, each value whole in its grammar — has
+its first-match answer at a fixed token position, so ``parse_turns`` reads
+canonical rows by position and builds the key/value array only for the
+rest. Canonical rows are 90.0% of the perfbench ``pipeline`` input and
+79.8% of the 10,000 sf0.01 transcripts; the classification, the canonical
+check and the split stay in codegen.
+
 The expressions are SQL text, handed to ``selectExpr`` (or one ``F.expr``
 per Column-returning helper): the JVM parses a whole projection in one
 call, where the Column API pays a py4j round trip per expression node
-(most ``F.*`` builders ~10 more, to record their Python call site). Built
-with the Column API, ``parse_turns`` sent 1,498 py4j commands and took
-~210 ms of driver time; as two ``selectExpr`` calls it sends 38 and takes
-~60 ms (4-core host, 90k-turn input). Regex and grammar constants are embedded as SQL string literals,
-so ``_sql_lit`` refuses (checked at import) any that holds a quote or a
-backslash: the SQL parser would end the literal there or unescape it into
-a different pattern.
+(most ``F.*`` builders ~10 more, to record their Python call site, unless
+``session.get_spark`` turned that off). Built with the Column API,
+``parse_turns`` sent 1,498 py4j commands and took ~210 ms of driver time;
+as three ``selectExpr`` calls it sends 46 and takes ~60 ms (4-core host,
+90k-turn input). Regex and grammar constants are embedded as SQL string
+literals, so ``_sql_lit`` refuses (checked at import) any that holds a
+quote or a backslash: the SQL parser would end the literal there or
+unescape it into a different pattern.
 
 A pandas-UDF grok fallback lives in functions/grok.py for grammars that
 need real Python.
@@ -71,6 +85,15 @@ RE_TRACE_DUR = r" dur_ms=([0-9]+)"
 CLASSIFY_LOG = r"^ts_us=[0-9]+ level="
 CLASSIFY_METRIC = r"^name=[a-z_]+ value="
 CLASSIFY_TRACE = r"^span=[0-9a-f]{16} parent="
+
+# A canonical line: every field once, in grammar order, each value whole in
+# its value grammar, nothing after the last field. ``(?s)...(?!.)`` anchors
+# at the true end of the input (a bare ``$`` would accept a trailing newline).
+CANONICAL = (
+    r'(?s)^(?:ts_us=[0-9]+ level=[A-Z]+ msg="[^"]*" code=[0-9]+(?: retry=(?:true|false))?'
+    r"|name=[a-z_]+ value=-?[0-9]+(?: unit=[a-z%]+)?"
+    r"|span=[0-9a-f]{16} parent=[0-9a-f]{8} dur_ms=[0-9]+)(?!.)"
+)
 
 # OTLP severity numbers (public OTel spec).
 SEVERITY_NUMBER = {"TRACE": 1, "DEBUG": 5, "INFO": 9, "WARN": 13, "ERROR": 17, "FATAL": 21}
@@ -121,7 +144,7 @@ SQL_EMBEDDED_PATTERNS = (
     RE_LOG_TS, RE_LOG_LEVEL, RE_LOG_MSG, RE_LOG_CODE, RE_LOG_RETRY,
     RE_METRIC_NAME, RE_METRIC_VALUE, RE_METRIC_UNIT,
     RE_TRACE_SPAN, RE_TRACE_PARENT, RE_TRACE_DUR,
-    CLASSIFY_LOG, CLASSIFY_METRIC, CLASSIFY_TRACE,
+    CLASSIFY_LOG, CLASSIFY_METRIC, CLASSIFY_TRACE, CANONICAL,
     *FIELD_VALUE_GRAMMAR.values(),
 )
 for _p in SQL_EMBEDDED_PATTERNS:
@@ -180,13 +203,23 @@ def classify_signal(text: str = "text") -> Column:
 # One-pass tokenizer: strip the quoted msg, split on spaces, key/value per
 # token. Tokens without '=' get a null value; empty values ('code=') null out
 # via nullif (P6 non-default suppression).
-_TOKENIZE = f"""
-transform(split(regexp_replace(text, {_sql_lit(RE_LOG_MSG)}, ''), ' '),
+_TOKENS = f"split(regexp_replace(text, {_sql_lit(RE_LOG_MSG)}, ''), ' ')"
+_TOKENIZE = """
+transform(__toks,
           s -> struct(substring_index(s, '=', 1) AS k,
                       CASE WHEN instr(s, '=') > 0
                            THEN nullif(substring(s, instr(s, '=') + 1), '')
                       END AS v))
 """
+
+# Canonical line position of each field's token in ``__toks`` (1-based;
+# msg is stripped before the split). For a CANONICAL line the tokenizer's
+# first match is exactly this token, and its value is whole in-grammar.
+_TOKEN_POS = {
+    "ts_us": 1, "level": 2, "code": 3, "retry": 4,
+    "name": 1, "value": 2, "unit": 3,
+    "span": 1, "parent": 2, "dur_ms": 3,
+}
 
 
 def _field(key: str) -> str:
@@ -196,8 +229,12 @@ def _field(key: str) -> str:
 
 
 def _vfield(key: str) -> str:
-    """``_field`` gated through the field's value grammar (prefix match)."""
-    return _x(_field(key), f"^({FIELD_VALUE_GRAMMAR[key]})")
+    """``key``'s value: on a canonical row the token at its fixed position
+    past ``key=`` (null when an optional field is absent), else ``_field``
+    gated through the field's value grammar (prefix match)."""
+    at_pos = f"substring(try_element_at(__toks, {_TOKEN_POS[key]}), {len(key) + 2})"
+    gated = _x(_field(key), f"^({FIELD_VALUE_GRAMMAR[key]})")
+    return f"CASE WHEN __canon THEN {at_pos} ELSE {gated} END"
 
 
 def _when_sig(sig: str, expr: str) -> str:
@@ -209,13 +246,16 @@ _SEV_TEXT = _when_sig("log", _vfield("level"))
 _MSG = _when_sig("log", _x("text", RE_LOG_MSG))
 _RETRY = _when_sig("log", _vfield("retry"))
 
-# Step 1 keeps the input columns and adds the classification and the token
-# array; step 2 reads every typed field from them.
+# Step 1 keeps the input columns and adds the classification, the canonical
+# flag and the token array; step 2 tokenizes the non-canonical rows only;
+# step 3 reads every typed field from them.
 _CLASSIFIED = (
     "conv_id", "turn_idx", "role", "tool", "ts", "text",
     f"{_classify_sql('text')} AS signal_type",
-    f"{_TOKENIZE} AS __kv",
+    f"rlike(text, {_sql_lit(CANONICAL)}) AS __canon",
+    f"{_TOKENS} AS __toks",
 )
+_TOKENIZED = ("*", f"CASE WHEN NOT __canon THEN {_TOKENIZE} END AS __kv")
 _PARSED = (
     "conv_id", "turn_idx", "role", "tool", "ts", "text", "signal_type",
     # log fields
@@ -251,4 +291,4 @@ def parse_turns(df: DataFrame) -> DataFrame:
     type, cf. the per-payload builders in
     /root/reference/pkg/otel/logs/arrow/logs.go:38-62).
     """
-    return df.selectExpr(*_CLASSIFIED).selectExpr(*_PARSED)
+    return df.selectExpr(*_CLASSIFIED).selectExpr(*_TOKENIZED).selectExpr(*_PARSED)

@@ -13,6 +13,10 @@ setting here is chosen to also be correct at cluster scale:
   (/root/reference/pkg/otel/arrow_record/producer.go:328-422 per-batch IPC).
 - UTC session timezone for DuckDB-oracle parity.
 - driver heap: $SPARK_DRIVER_MEM, else sized from the host's memory.
+- no DataFrame call-site capture: with it on, every ``F.*`` builder and
+  DataFrame method sends extra py4j commands to record its Python origin
+  for error messages (the six perfbench ``query_surface`` queries:
+  13,544 -> 5,730 commands per pass).
 """
 
 from __future__ import annotations
@@ -63,6 +67,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _host_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -4,7 +4,11 @@
 from pyspark.sql import functions as F
 
 from otel_arrow_adapter_spark.operators import melt_attributes, parse_turns
+from otel_arrow_adapter_spark.operators.enrich import enrich_with_catalog
 from otel_arrow_adapter_spark.operators.melt import ATTR_BOOL, ATTR_INT, ATTR_STR
+from otel_arrow_adapter_spark.operators.normalize import assign_surrogate_ids
+from otel_arrow_adapter_spark.operators.parse import CANONICAL
+from otel_arrow_adapter_spark.operators.route import label_sinks, suppress_rebuildable_text
 
 
 def test_classification_partition(spark, transcripts):
@@ -55,6 +59,21 @@ def test_optional_fields_are_null_not_empty(spark):
     row = parse_turns(df).collect()[0]
     assert row.retry is None
     assert row.metric_name is None and row.span_hex is None
+
+
+def test_canonical_covers_every_rebuildable_row(synth_transcripts, catalog):
+    """Every row whose text the typed columns rebuild byte-exactly is a
+    canonical line, so it takes parse's by-position fast path. The
+    differential tests cannot see a CANONICAL that matches too little: the
+    tokenizer would then parse every row, correctly and slowly."""
+    labeled = label_sinks(enrich_with_catalog(
+        assign_surrogate_ids(parse_turns(synth_transcripts), mode="hash"), catalog
+    )).withColumn("raw", F.col("text"))
+    rebuildable = suppress_rebuildable_text(labeled).where(
+        F.col("text").isNull() & F.col("raw").isNotNull()
+    )
+    assert rebuildable.count() > 0
+    assert rebuildable.where(~F.col("raw").rlike(CANONICAL)).count() == 0
 
 
 def test_melt_shape_and_union_invariant(spark, transcripts):

@@ -194,6 +194,37 @@ ADVERSARIAL = [
     ("c-10", 3, "tool", "tool-2", "!!corrupt payload 9"),
     # one multi-MB text
     ("c-11", 0, "u", "tool-1", f'ts_us=9 level=INFO msg="{BIG_MSG}" code=5'),
+    # the canonical-line boundary: rows just inside and just outside
+    # parse.CANONICAL, where fields are read by token position
+    # a trailing newline, and a newline inside a token
+    ("c-12", 0, "u", "tool-1", 'ts_us=10 level=INFO msg="nl" code=1 retry=true\n'),
+    ("c-12", 1, "u", "tool-1", "name=cpu value=1 unit=ms\n"),
+    ("c-12", 2, "u", "tool-1", "span=0123456789abcdef parent=0123\n4567 dur_ms=3"),
+    ("c-12", 3, "u", "tool-1", 'ts_us=10 level=IN\nFO msg="nl" code=1'),
+    # optional retry/unit present and absent
+    ("c-13", 0, "u", "tool-1", 'ts_us=11 level=WARN msg="r" code=2 retry=false'),
+    ("c-13", 1, "u", "tool-1", 'ts_us=11 level=WARN msg="r" code=2'),
+    ("c-13", 2, "u", "tool-1", "name=mem value=7 unit=mb"),
+    ("c-13", 3, "u", "tool-1", "name=mem value=7"),
+    # a canonical line plus one token, a repeated key after a canonical line,
+    # a trailing space
+    ("c-14", 0, "u", "tool-1", 'ts_us=12 level=INFO msg="e" code=3 retry=true extra'),
+    ("c-14", 1, "u", "tool-1", "name=cpu value=1 unit=ms value=9"),
+    ("c-14", 2, "u", "tool-1", "span=0123456789abcdef parent=01234567 dur_ms=1 dur_ms=2"),
+    ("c-14", 3, "u", "tool-1", 'ts_us=12 level=INFO msg="e" code=3 code=4'),
+    ("c-14", 4, "u", "tool-1", "name=cpu value=1 "),
+    # values whose text a cast does not give back, an empty msg, a ts_us
+    # past BIGINT
+    ("c-15", 0, "u", "tool-1", 'ts_us=13 level=INFO msg="z" code=007'),
+    ("c-15", 1, "u", "tool-1", "name=cpu value=-0 unit=%"),
+    ("c-15", 2, "u", "tool-1", 'ts_us=13 level=INFO msg="" code=1'),
+    ("c-15", 3, "u", "tool-1", 'ts_us=99999999999999999999 level=INFO msg="o" code=1'),
+    # a msg that holds ' msg=', bare keys before their key=value token
+    ("c-16", 0, "u", "tool-1", 'ts_us=14 level=INFO msg="x msg=" code=1'),
+    ("c-16", 1, "u", "tool-1", 'ts_us=14 level level=INFO msg="b" code=1'),
+    ("c-16", 2, "u", "tool-1", 'ts_us=14 level=INFO msg="b" code code=1'),
+    # non-ASCII inside msg
+    ("c-17", 0, "u", "tool-1", 'ts_us=15 level=INFO msg="héllo ✓ 日本語" code=4 retry=false'),
 ]
 
 
